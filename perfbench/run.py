@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Benchmark launcher.
 
-    python3 perfbench/run.py --workload <publish|route|lookup|dedup> \
+    python3 perfbench/run.py --workload <lookup|dedup> \
         --seed <n> --seconds <s> --trace <0|1>
 
 Run from the root of a checkout. The first call builds the program and the
@@ -23,8 +23,8 @@ import sys
 HEAP = "1g"
 # Spark task threads. Two, leaving the other cores of a 4-core machine to the
 # JIT compiler, the collector and the listener bus: with every core running
-# tasks, their competition made the run-to-run spread of publish's op_p50_ms
-# ten times wider (0.21 against 0.02 of the median over four seeds).
+# tasks, their competition made the run-to-run spread of a CalculateTimes.run
+# call ten times wider (0.21 against 0.02 of the median over four seeds).
 PARALLELISM = 2
 RUN_TIMEOUT_S = 170
 BUILD_TIMEOUT_S = 840

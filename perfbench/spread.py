@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Run-to-run spread of the benchmark.
 
-    python3 perfbench/spread.py --workloads publish,route --runs 10 [--seed0 1] [--trace 0]
+    python3 perfbench/spread.py --workloads lookup,dedup --runs 10 [--seed0 1] [--trace 0]
 
 Runs perfbench/run.py once per seed (seed0, seed0+1, ...) for each workload,
 from the root of a checkout, and prints for every metric the median, the

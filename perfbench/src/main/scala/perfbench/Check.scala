@@ -55,13 +55,12 @@ object Check {
       origins: Seq[String],
       dests: Seq[String],
       duration: (String, String) => Option[Double],
-      tolerance: Double,
       partition: Map[String, String])
 
   /** Checks the four trees `CalculateTimes.run` published:
     *  - every `times` file is sorted by (origin_id, destination_id), carries
     *    the configured partition values and the origin's state;
-    *  - every duration equals the closed form (within `tolerance`);
+    *  - every duration equals the closed form exactly;
     *  - `missing_pairs` is exactly the set of pairs the closed form leaves
     *    unroutable;
     *  - pair conservation: |times| + |missing_pairs| = |O|·|D|, and the
@@ -86,7 +85,7 @@ object Check {
         require(seen.add(o + "|" + d), s"pair $key published twice")
         (e.duration(o, d), dbl(g, "duration_sec")) match {
           case (Some(want), Some(got)) =>
-            require(math.abs(want - got) <= e.tolerance, s"pair $key: duration $got, closed form $want")
+            require(want == got, s"pair $key: duration $got, closed form $want")
           case (want, got) => require(false, s"pair $key: duration $got, closed form $want")
         }
         nTimes += 1
@@ -108,6 +107,14 @@ object Check {
       meta.head.getLong("calc_n_missing_pairs", 0) == missing.size,
       s"metadata counts ${meta.head.getLong("calc_n_pairs", 0)}/" +
         s"${meta.head.getLong("calc_n_missing_pairs", 0)} vs $nPairs/${missing.size}")
+  }
+
+  /** The signature artifact must hold one row per document and band. */
+  def signatures(dir: String, docs: Seq[String], bands: Int): Unit = {
+    val got = dataFiles(dir).flatMap { case (f, _) => rows(f).map(g => (str(g, "doc_id"), g.getInteger("band", 0))) }
+    val want = for (d <- docs; b <- 0 until bands) yield (d, b)
+    require(got.size == want.size && got.toSet == want.toSet,
+      s"signatures hold ${got.size} rows, ${got.toSet.size} distinct (doc, band), expected ${want.size}")
   }
 
   /** The dedup output must be exactly the intra-cluster pairs, each with

@@ -65,88 +65,21 @@ object Gen {
 
   def odSet(seed: Long, nO: Int, nD: Int, nIslandO: Int, nIslandD: Int): OdSet = {
     val r = new scala.util.Random(seed)
-    def pt(id: String => String): RawPoint = {
+    // every seventh point lies above the snapper's cut-off (44°) and keeps
+    // its raw coordinates; a fixed share, since those pairs' durations are
+    // the least compressible and a share drawn at random moved
+    // stored_bytes_per_item by 7 % from one seed to another
+    def pt(i: Int, id: String => String): RawPoint = {
       val state = States(r.nextInt(States.size))
-      RawPoint(id(state), -100.0 + r.nextDouble() * 20.0, 30.0 + r.nextDouble() * 15.0)
+      val lon = -100.0 + r.nextDouble() * 20.0
+      val lat = if (i % 7 == 0) 44.5 + r.nextDouble() * 0.5 else 30.0 + r.nextDouble() * 14.0
+      RawPoint(id(state), lon, lat)
     }
-    val origins = (0 until nO).map(i => pt(originId(i, _)))
-    val dests = (0 until nD).map(j => pt(destId(j, _)))
+    val origins = (0 until nO).map(i => pt(i, originId(i, _)))
+    val dests = (0 until nD).map(j => pt(j, destId(j, _)))
     val islandO = r.shuffle(origins.map(_.id)).take(nIslandO).toSet
     val islandD = r.shuffle(dests.map(_.id)).take(nIslandD).toSet
-    // 44.0 leaves about a seventh of the points unsnapped
     OdSet(origins, dests, islandO, islandD, noSnapAboveLat = 44.0, speedMps = 30.0)
-  }
-
-  // ------------------------------------------------------- road network
-
-  /** A uniform square grid of residential streets plus one small grid far
-    * enough away (more than the snap radius) that it forms a separate
-    * component, which island pruning removes. Coordinates are dyadic, so
-    * every hop weighs exactly [[hopSec]] and a path of k hops exactly
-    * k × hopSec.
-    */
-  final case class Grid(size: Int, islandSize: Int) {
-    val step: Double = 1.0 / 64
-    val lon0: Double = -95.0
-    val lat0: Double = 35.0
-    // about 670 km west of the main grid: beyond the 300 km snap radius
-    val islandLon0: Double = lon0 - 6.0
-    /** residential class speed (RoadNetwork.CarSpeedsMps) */
-    val hopSec: Double = step * 111320.0 / 8.0
-
-    def nodeId(r: Int, c: Int): Long = 1L + r.toLong * size + c
-    def islandNodeId(r: Int, c: Int): Long = 10000000L + r.toLong * islandSize + c
-
-    /** (id, lat, lon) rows — the shape of `OsmPbf.nodes` */
-    def nodes: Seq[(Long, Double, Double)] =
-      (for (r <- 0 until size; c <- 0 until size)
-        yield (nodeId(r, c), lat0 + r * step, lon0 + c * step)) ++
-        (for (r <- 0 until islandSize; c <- 0 until islandSize)
-          yield (islandNodeId(r, c), lat0 + r * step, islandLon0 + c * step))
-
-    /** (id, refs, tags) rows — the shape of `OsmPbf.ways` */
-    def ways: Seq[(Long, Array[Long], Map[String, String])] = {
-      val tags = Map("highway" -> "residential")
-      def lines(n: Int, id: (Int, Int) => Long, base: Long) =
-        (0 until n).map(r => (base + r, Array.tabulate(n)(c => id(r, c)), tags)) ++
-          (0 until n).map(c => (base + n + c, Array.tabulate(n)(r => id(r, c)), tags))
-      lines(size, nodeId, 1L) ++ lines(islandSize, islandNodeId, 1000000L)
-    }
-  }
-
-  /** Points at grid nodes with a jitter well under half a step, so each
-    * snaps to exactly one node; `nIsland` of each side sit on the island.
-    */
-  final case class GridOd(
-      grid: Grid,
-      origins: IndexedSeq[(RawPoint, Option[(Int, Int)])],
-      dests: IndexedSeq[(RawPoint, Option[(Int, Int)])]) {
-    def nPairs: Long = origins.size.toLong * dests.size
-
-    /** Manhattan closed form over grid cells, None when either end is on
-      * the island.
-      */
-    def duration(o: Option[(Int, Int)], d: Option[(Int, Int)]): Option[Double] =
-      for ((r1, c1) <- o; (r2, c2) <- d)
-        yield (math.abs(r1 - r2) + math.abs(c1 - c2)) * grid.hopSec
-  }
-
-  def gridOd(seed: Long, grid: Grid, nO: Int, nD: Int, nIsland: Int): GridOd = {
-    val r = new scala.util.Random(seed)
-    def jitter: Double = (r.nextDouble() - 0.5) * grid.step / 4
-    def pt(id: String, island: Boolean): (RawPoint, Option[(Int, Int)]) =
-      if (island) {
-        val (rr, cc) = (r.nextInt(grid.islandSize), r.nextInt(grid.islandSize))
-        (RawPoint(id, grid.islandLon0 + cc * grid.step + jitter, grid.lat0 + rr * grid.step + jitter), None)
-      } else {
-        val (rr, cc) = (r.nextInt(grid.size), r.nextInt(grid.size))
-        (RawPoint(id, grid.lon0 + cc * grid.step + jitter, grid.lat0 + rr * grid.step + jitter), Some((rr, cc)))
-      }
-    def side(n: Int, id: (Int, String) => String) = {
-      val island = r.shuffle((0 until n).toList).take(nIsland).toSet
-      (0 until n).map(i => pt(id(i, States(r.nextInt(States.size))), island(i)))
-    }
-    GridOd(grid, side(nO, originId), side(nD, destId))
   }
 
   // ------------------------------------------------------ lookup mix

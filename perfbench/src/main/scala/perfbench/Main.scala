@@ -13,9 +13,10 @@ import graft.GraftSession
   *
   * Set-up is repeated three times from scratch (the median counts), then a
   * few warm-up rounds run, then whole rounds of operations run until
-  * `--seconds` have passed. Each operation is timed alone; its output is
-  * checked afterwards, outside the timed region. The last line of standard
-  * output is the result object.
+  * `--seconds` have passed. Each set-up and each operation is timed alone;
+  * its output is checked afterwards, outside the timed region, and a wrong
+  * output anywhere, warm-up included, makes the run incorrect. The last
+  * line of standard output is the result object.
   *
   * With `--trace 1` rounds alternate between traced and untraced, and the
   * per-layer metrics are medians over the traced operations.
@@ -30,7 +31,7 @@ object Main {
     "jobs.calculate_ms" -> "ms", "jobs.commit_ms" -> "ms",
     "routing.router_calls" -> "count", "routing.router_busy_ms" -> "ms",
     "routing.router_ok_ratio" -> "ratio", "routing.snap_busy_ms" -> "ms",
-    "routing.snap_points" -> "count", "routing.graph_build_ms" -> "ms",
+    "routing.snap_points" -> "count",
     "sources.bytes_written" -> "B", "sources.files_written" -> "count",
     "sources.fs_renames" -> "count", "sources.fs_write_ops" -> "count",
     "sources.files_read" -> "count", "sources.bytes_read" -> "B",
@@ -88,30 +89,41 @@ object Main {
       // set-up, repeated from scratch; the last one stays for the run and,
       // in a traced run, is traced as operation 0
       var setupLayer = Map.empty[String, Double]
+      var setupWrong = false
       val setupS = (0 until SetupReps).map { rep =>
         val dir = work.resolve(s"setup-$rep")
         val traceThis = traced && rep == SetupReps - 1
         tr.beginOp(0, traceThis)
         val t0 = System.nanoTime()
-        tr.span("setup", s"$name set-up")(w.setup(dir))
+        val check = tr.span("setup", s"$name set-up")(w.setup(dir))
         val s = (System.nanoTime() - t0) / 1e9
         val layer = tr.endOp()
         if (traceThis) setupLayer = layer
+        val c0 = System.nanoTime()
+        try check()
+        catch { case e: CheckFailed => log(s"set-up check failed: ${e.getMessage}"); setupWrong = true }
         if (rep > 0) deleteTree(work.resolve(s"setup-${rep - 1}"))
-        log(f"set-up $rep: $s%.3f s")
+        log(f"set-up $rep: $s%.3f s, check ${(System.nanoTime() - c0) / 1e9}%.3f s")
         s
       }
       val heap = new HeapPeak
       heap.sample()
 
       var n = 0L
-      final case class Op(ms: Double, ok: Boolean, wrong: Boolean, items: Long, stored: Seq[Long],
+      final case class Op(ms: Double, ok: Boolean, wrong: Boolean, items: Long,
           traced: Boolean, layer: Map[String, Double])
+      // per-layer values of the traced extra calls, one per traced operation
+      val extras = mutable.ArrayBuffer.empty[Map[String, Double]]
       def runOp(k: Int, withTrace: Boolean): Op = {
+        if (withTrace && w.extraLayers.nonEmpty) {
+          n += 1
+          tr.beginOp(n, traced = true)
+          w.tracedExtra()
+          extras += tr.endOp()
+        }
         n += 1
         val dir = work.resolve(s"op-$n")
         tr.beginOp(n, withTrace)
-        w.tracedExtra()
         val t0 = System.nanoTime()
         val cpu0 = cpuNanos()
         val done = try Right(tr.span("op", s"$name[$k]")(w.op(k, dir)))
@@ -128,16 +140,13 @@ object Main {
           case Left(e) =>
             log(s"operation failed: $e"); (false, false)
         }
-        val stored = done.toOption.map(_.stored()).getOrElse(Nil)
         deleteTree(dir)
         log(f"op $n%d ($k%d${if (withTrace) ", traced" else ""}): $ms%.1f ms (process CPU $cpuMs%.0f ms), " +
           f"check+cleanup ${(System.nanoTime() - c0) / 1e6}%.1f ms")
-        val files = if (stored.isEmpty) Map.empty
-          else Map("sources.bytes_written" -> stored.sum.toDouble, "sources.files_written" -> stored.size.toDouble)
-        Op(ms, ok, wrong, done.map(_.items).getOrElse(0L), stored, withTrace, if (withTrace) layer ++ files else layer)
+        Op(ms, ok, wrong, done.map(_.items).getOrElse(0L), withTrace, layer)
       }
 
-      for (_ <- 0 until w.warmupRounds; k <- 0 until w.opsPerRound) runOp(k, withTrace = false)
+      val warm = for (_ <- 0 until w.warmupRounds; k <- 0 until w.opsPerRound) yield runOp(k, withTrace = false)
       heap.sample()
 
       val ops = mutable.ArrayBuffer.empty[Op]
@@ -155,30 +164,29 @@ object Main {
       val measured = ops.filterNot(_.traced)
       val metrics: Seq[(String, Double)] = if (!traced) {
         val ms = measured.map(_.ms).toSeq
-        val stored = measured.filter(_.stored.nonEmpty).map(o => o.stored.sum.toDouble / o.items).toSeq
         Seq(
           "setup_s" -> (sessionS + Stats.median(setupS)),
           "op_p50_ms" -> Stats.quantile(ms, 0.5),
           "items_per_s" -> measured.filter(_.ok).map(_.items).sum / (ms.sum / 1000.0),
-          "stored_bytes_per_item" -> (if (stored.nonEmpty) Stats.median(stored)
-            else w.setupStoredBytesPerItem.getOrElse(0.0)),
+          "stored_bytes_per_item" -> w.storedBytesPerItem,
           "heap_peak_mb" -> heap.peakMb)
       } else {
         val t = ops.filter(_.traced)
-        // a layer the operations do not exercise reports the traced set-up
-        val layers = t.map(_.layer)
+        // each metric is read from one source the workload names: its
+        // traced set-up, its traced extra calls, or its traced operations
+        def source(m: String): Seq[Map[String, Double]] =
+          if (w.setupLayers(m)) Seq(setupLayer)
+          else if (w.extraLayers(m)) extras.toSeq
+          else t.map(_.layer).toSeq
         def sum(ls: Seq[Map[String, Double]], k: String) = ls.map(_.getOrElse(k, 0.0)).sum
-        def med(k: String) = {
-          val v = Stats.median(layers.map(_.getOrElse(k, 0.0)).toSeq)
-          if (v != 0.0) v else setupLayer.getOrElse(k, 0.0)
-        }
+        def med(m: String) = Stats.median(source(m).map(_.getOrElse(m, 0.0)))
         val ratios = Ratios.map { case (m, (num, den)) =>
-          val from = if (sum(layers.toSeq, den) > 0) layers.toSeq else Seq(setupLayer)
+          val from = source(m)
           m -> (if (sum(from, den) > 0) sum(from, num) / sum(from, den) else 0.0)
         }.toMap
         val tP50 = Stats.median(t.map(_.ms).toSeq)
         val uP50 = Stats.median(measured.map(_.ms).toSeq)
-        val special = ratios ++ w.setupValues ++ Map(
+        val special = ratios ++ Map(
           "op_p90_ms" -> Stats.quantile(measured.map(_.ms).toSeq, 0.9),
           "trace.op_p50_ms" -> tP50, "trace.untraced_op_p50_ms" -> uP50, "trace.overhead_ms" -> (tP50 - uP50))
         tr.write(Paths.get(a.getOrElse("traces", work.resolve("traces").toString))
@@ -189,9 +197,11 @@ object Main {
       val body = metrics.map { case (m, v) =>
         s""""$m": {"value": ${Json.num(v)}, "unit": "${units(m)}"}""" }.mkString(", ")
       val failed = measured.count(!_.ok)
-      // a wrong answer makes the run incorrect; an operation that threw
-      // only counts as failed
-      println(s"""{"correct": ${!ops.exists(_.wrong)}, "attempted": ${measured.size}, """ +
+      // a wrong answer, in set-up, warm-up or a measured operation, makes
+      // the run incorrect; a measured operation that threw only counts as
+      // failed
+      val correct = !setupWrong && !(warm ++ ops).exists(_.wrong)
+      println(s"""{"correct": $correct, "attempted": ${measured.size}, """ +
         s""""failed": $failed, "metrics": {$body}}""")
     } finally spark.stop()
   }

@@ -12,36 +12,41 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.aggregate.HashAggregateExec
 import org.apache.spark.sql.execution.FileSourceScanExec
 
-/** What one operation hands back: its item count, the independent check
-  * of its output, and the data files it left stored, if any — both
-  * evaluated outside the timed region.
+/** What one operation hands back: its item count and the independent check
+  * of its output, run outside the timed region.
   */
-final case class Done(items: Long, check: () => Unit, stored: () => Seq[Long] = () => Nil)
+final case class Done(items: Long, check: () => Unit)
 
 /** A workload: a set-up that can be repeated from scratch, and a round of
   * operations every run repeats whole.
   */
 trait Workload {
-  /** Builds everything the operations need under `dir`. */
-  def setup(dir: Path): Unit
+  /** Builds everything the operations need under `dir`, and returns the
+    * independent check of what it built, run after set-up is timed.
+    */
+  def setup(dir: Path): () => Unit
   def opsPerRound: Int
   def warmupRounds: Int
   /** Operation `k` of a round; anything it writes goes under `dir`. */
   def op(k: Int, dir: Path): Done
-  /** Bytes stored per item, for workloads whose storage is set up once. */
-  def setupStoredBytesPerItem: Option[Double] = None
-  /** Per-layer values measured during set-up (median over repetitions). */
-  def setupValues: Map[String, Double] = Map.empty
-  /** A call made only in traced runs, outside the operation's own span. */
+  /** Bytes set-up stored per item. */
+  def storedBytesPerItem: Double
+  /** Per-layer metrics of layers only set-up exercises: a traced run reads
+    * them from its traced set-up, not from the operations.
+    */
+  def setupLayers: Set[String] = Set.empty
+  /** Per-layer metrics read from [[tracedExtra]] alone. */
+  def extraLayers: Set[String] = Set.empty
+  /** A call made in traced rounds only, traced as an operation of its own
+    * ahead of each traced operation.
+    */
   def tracedExtra(): Unit = ()
 }
 
 object Workloads {
-  val names = Seq("publish", "route", "lookup", "dedup")
+  val names = Seq("lookup", "dedup")
 
   def apply(name: String, spark: SparkSession, seed: Long, tr: Trace): Workload = name match {
-    case "publish" => new Publish(spark, seed, tr)
-    case "route" => new Route(spark, seed, tr)
     case "lookup" => new Lookup(spark, seed, tr)
     case "dedup" => new DedupW(spark, seed, tr)
     case other => throw new IllegalArgumentException(s"unknown workload '$other'")
@@ -49,6 +54,13 @@ object Workloads {
 
   val Partition = Map("version" -> "0.0.1", "mode" -> "car", "year" -> "2024",
     "geography" -> "county", "centroid_type" -> "weighted")
+
+  /** What `CalculateTimes.run` must publish for `od` with `SyntheticRouter`
+    * and `GridSnapper`; durations are exact, since the closed form repeats
+    * the router's IEEE operations.
+    */
+  def expect(od: Gen.OdSet): Check.Expect =
+    Check.Expect(od.origins.map(_.id), od.dests.map(_.id), od.durationOf, Partition)
 
   def treeDirs(r: CalculateTimes.Result): Seq[String] =
     Seq(r.timesDir, r.missingDir, r.pointsDir, r.metadataDir)
@@ -65,90 +77,9 @@ object Workloads {
 }
 import Workloads._
 
-/** The flagship job's write path: routing is arithmetic, so snap, chunking,
-  * the ordered zstd publish, the missing-pairs anti-join and the tree
-  * commit do the work. Planted island ids make whole blocks fail, so the
-  * quadtree split runs down to single pairs.
-  */
-final class Publish(spark: SparkSession, seed: Long, tr: Trace) extends Workload {
-  private var od: Gen.OdSet = _
-  private var origins, dests: Dataset[RawPoint] = _
-  private var expect: Check.Expect = _
-
-  def setup(dir: Path): Unit = {
-    od = Gen.odSet(seed, nO = 300, nD = 200, nIslandO = 4, nIslandD = 3)
-    origins = ds(spark, od.origins)
-    dests = ds(spark, od.dests)
-    expect = Publish.expect(od)
-  }
-  val opsPerRound = 1
-  val warmupRounds = 1
-
-  def op(k: Int, dir: Path): Done = {
-    val (io, id) = (od.islandO, od.islandD)
-    val router = new SyntheticRouter(od.speedMps, p => io.contains(p.id), p => id.contains(p.id))
-    val res = tr.span("call", "jobs.CalculateTimes.run", "jobs.calculate_ms") {
-      CalculateTimes.run(spark, origins, dests,
-        tr.snapper(new GridSnapper(od.noSnapAboveLat)), tr.router(router),
-        CalculateTimes.Config(oSplit = 64, dSplit = 64, maxDepth = 12, outDir = dir.toString),
-        failpoint = tr.failpoint)
-    }
-    Done(od.nPairs, () => Check.published(res, expect), () => Check.fileSizes(treeDirs(res)))
-  }
-}
-
-object Publish {
-  /** Durations are exact: the closed form repeats the router's IEEE operations. */
-  def expect(od: Gen.OdSet): Check.Expect =
-    Check.Expect(od.origins.map(_.id), od.dests.map(_.id), od.durationOf, tolerance = 0.0, Partition)
-}
-
-/** The same job over a road network, built as `Pipeline.national`'s
-  * calculate_times stage builds it. Per-origin Dijkstra does the work; the
-  * published trees are small.
-  */
-final class Route(spark: SparkSession, seed: Long, tr: Trace) extends Workload {
-  private val grid = Gen.Grid(size = 260, islandSize = 3)
-  private var od: Gen.GridOd = _
-  private var origins, dests: Dataset[RawPoint] = _
-  private var csr: org.apache.spark.broadcast.Broadcast[RoadNetwork.CsrGraph] = _
-  private var expect: Check.Expect = _
-  private val buildMs = scala.collection.mutable.ArrayBuffer.empty[Double]
-
-  def setup(dir: Path): Unit = {
-    import spark.implicits._
-    od = Gen.gridOd(seed, grid, nO = 320, nD = 160, nIsland = 3)
-    origins = ds(spark, od.origins.map(_._1))
-    dests = ds(spark, od.dests.map(_._1))
-    val cell = (od.origins ++ od.dests).map { case (p, c) => p.id -> c }.toMap
-    expect = Check.Expect(od.origins.map(_._1.id), od.dests.map(_._1.id),
-      (o, d) => od.duration(cell(o), cell(d)), tolerance = 1e-6, Partition)
-    if (csr != null) csr.destroy()
-    val t0 = System.nanoTime()
-    val nodes = grid.nodes.toDF("id", "lat", "lon")
-    val ways = grid.ways.toDF("id", "refs", "tags")
-    val e = RoadNetwork.edges(nodes, ways, RoadNetwork.Car)
-    csr = spark.sparkContext.broadcast(RoadNetwork.buildCsr(e, pruneIslands = true))
-    buildMs += (System.nanoTime() - t0) / 1e6
-  }
-  val opsPerRound = 1
-  val warmupRounds = 2
-  override def setupValues: Map[String, Double] = Map("routing.graph_build_ms" -> Stats.median(buildMs.toSeq))
-
-  def op(k: Int, dir: Path): Done = {
-    val res = tr.span("call", "jobs.CalculateTimes.run", "jobs.calculate_ms") {
-      CalculateTimes.run(spark, origins, dests,
-        tr.snapper(new RoadNetwork.NetworkSnapper(csr)), tr.router(new RoadNetwork.NetworkRouter(csr)),
-        CalculateTimes.Config(oSplit = 8, dSplit = 160, maxDepth = 6, outDir = dir.toString),
-        failpoint = tr.failpoint)
-    }
-    Done(od.nPairs, () => Check.published(res, expect), () => Check.fileSizes(treeDirs(res)))
-  }
-}
-
 /** Consumer queries over views attached from a pointer catalog, against a
-  * tree published once during set-up: pair, origin, destination-only
-  * (bloom filter) and times ⋈ points lookups.
+  * tree published during set-up: pair, origin, destination-only (bloom
+  * filter) and times ⋈ points lookups.
   */
 final class Lookup(spark: SparkSession, seed: Long, tr: Trace) extends Workload {
   private var od: Gen.OdSet = _
@@ -157,9 +88,10 @@ final class Lookup(spark: SparkSession, seed: Long, tr: Trace) extends Workload 
 
   /** Publishes the served tree with `CalculateTimes.run` (so the flagship
     * job's cost shows in this workload's `setup_s`) and attaches its four
-    * tables from a pointer catalog.
+    * tables from a pointer catalog. Planted island ids make whole routing
+    * blocks fail, so the quadtree split runs down to single pairs.
     */
-  def setup(dir: Path): Unit = {
+  def setup(dir: Path): () => Unit = {
     od = Gen.odSet(seed, nO = 600, nD = 400, nIslandO = 5, nIslandD = 4)
     val (io, id) = (od.islandO, od.islandD)
     val res = tr.span("call", "jobs.CalculateTimes.run", "jobs.calculate_ms") {
@@ -177,13 +109,29 @@ final class Lookup(spark: SparkSession, seed: Long, tr: Trace) extends Workload 
     tr.add("sources.bytes_written", sizes.sum.toDouble)
     tr.add("sources.files_written", sizes.size.toDouble)
     bytesPerPair = sizes.sum.toDouble / od.nPairs
-    queries = Gen.lookupRound(seed + 1, od, perKind = 4)
+    queries = Gen.lookupRound(seed + 1, od, perKind)
+    val want = expect(od)
+    () => Check.published(res, want)
   }
-  val opsPerRound = 16
-  // query times fall for about eight rounds as the JIT compiles; six
-  // leave the measured rounds near the flat end within the time budget
-  val warmupRounds = 6
-  override def setupStoredBytesPerItem: Option[Double] = Some(bytesPerPair)
+  // query times differ by a fifth from one id to another, so a round
+  // samples many ids to keep the median from depending on the seed
+  private val perKind = 8
+  val opsPerRound = 4 * perKind
+  // query times fall for about 250 queries as the JIT compiles (a round
+  // median of 70 ms in the first round, about 46 ms from the eighth on);
+  // measuring earlier made the run's median depend on how far compilation
+  // had got
+  val warmupRounds = 8
+  def storedBytesPerItem: Double = bytesPerPair
+
+  // the operations only read: the job, routing, the write side of
+  // `sources` and the stages they start show in the traced set-up
+  override val setupLayers: Set[String] = Set(
+    "jobs.calculate_ms", "jobs.commit_ms",
+    "routing.router_calls", "routing.router_busy_ms", "routing.router_ok_ratio",
+    "routing.snap_busy_ms", "routing.snap_points",
+    "sources.bytes_written", "sources.files_written", "sources.fs_renames", "sources.fs_write_ops",
+    "spark.stage_ms.jobs", "spark.stage_ms.routing", "spark.stage_ms.sources")
 
   private val keys = Partition.map { case (k, v) => s"t.$k = '$v'" }.mkString(" AND ")
   private def st(id: String) = s"t.state = '${id.substring(7, 9)}'"
@@ -237,7 +185,7 @@ final class Lookup(spark: SparkSession, seed: Long, tr: Trace) extends Workload 
 }
 
 /** MinHash near-duplicate detection over planted clusters: the operator
-  * library, sharing no work with the other workloads.
+  * library, sharing no work with the travel-time job.
   */
 final class DedupW(spark: SparkSession, seed: Long, tr: Trace) extends Workload {
   private var corpus: Gen.Corpus = _
@@ -245,21 +193,31 @@ final class DedupW(spark: SparkSession, seed: Long, tr: Trace) extends Workload 
   private var want: Map[(String, String), Double] = _
   private var sigBytesPerDoc = 0.0
 
-  def setup(dir: Path): Unit = {
+  def setup(dir: Path): () => Unit = {
     import spark.implicits._
-    corpus = Gen.corpus(seed, clusters = 60, words = 300, edits = 2)
+    corpus = Gen.corpus(seed, clusters = 20, words = 300, edits = 2)
     docs = corpus.docs.toDF("doc_id", "text")
     val text = corpus.docs.toMap
     want = corpus.expectedPairs.map { case (a, b) => (a, b) -> Gen.jaccard(text(a), text(b)) }.toMap
     // the persistable signature artifact a rolling ingest keeps per document
     val sigDir = dir.resolve("signatures").toString
     Dedup.minhashSignatures(docs).write.mode("overwrite").option("compression", "zstd").parquet(sigDir)
-    sigBytesPerDoc = Check.fileSizes(Seq(sigDir)).sum.toDouble / corpus.docs.size
+    val sizes = Check.fileSizes(Seq(sigDir))
+    tr.add("sources.bytes_written", sizes.sum.toDouble)
+    tr.add("sources.files_written", sizes.size.toDouble)
+    sigBytesPerDoc = sizes.sum.toDouble / corpus.docs.size
+    val ids = corpus.docs.map(_._1)
+    () => Check.signatures(sigDir, ids, bands = 16)
   }
   val opsPerRound = 1
-  // operation times fall for about five calls as the JIT compiles
-  val warmupRounds = 4
-  override def setupStoredBytesPerItem: Option[Double] = Some(sigBytesPerDoc)
+  // operation times fall for about a dozen calls as the JIT compiles
+  val warmupRounds = 12
+  def storedBytesPerItem: Double = sigBytesPerDoc
+
+  // only set-up writes: the signature artifact
+  override val setupLayers: Set[String] = Set(
+    "sources.bytes_written", "sources.files_written", "sources.fs_renames", "sources.fs_write_ops")
+  override val extraLayers: Set[String] = Set("operators.signature_ms")
 
   /** The signature stage alone, forced through a no-op sink. */
   override def tracedExtra(): Unit =

@@ -43,12 +43,12 @@ class NegativeControlSpec extends AnyFunSuite {
     val od = Gen.odSet(seed = 7, nO = 24, nD = 16, nIslandO = 2, nIslandD = 1)
     val (io, id) = (od.islandO, od.islandD)
     val honest = new SyntheticRouter(od.speedMps, p => io.contains(p.id), p => id.contains(p.id))
-    Check.published(publish(od, honest, "honest"), Publish.expect(od))
+    Check.published(publish(od, honest, "honest"), Workloads.expect(od))
 
     val o = od.origins.map(_.id).find(x => !io.contains(x)).get
     val d = od.dests.map(_.id).find(x => !id.contains(x)).get
     val e = intercept[CheckFailed] {
-      Check.published(publish(od, new OneSecondOff(honest, o, d), "off"), Publish.expect(od))
+      Check.published(publish(od, new OneSecondOff(honest, o, d), "off"), Workloads.expect(od))
     }
     assert(e.getMessage.contains(s"($o,$d)"), e.getMessage)
   }
