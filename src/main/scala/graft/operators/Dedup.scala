@@ -1,8 +1,11 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.XxHash64Function
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Deduplication operator family for document corpora, designed
   * shuffle-light for 100 TB:
@@ -13,10 +16,14 @@ import org.apache.spark.sql.functions._
   *    ground-truth (and oracle-checkable) pair finder; cost is driven by
   *    shingle collision counts, not |docs|².
   *  - [[minhashPairs]]: MinHash + banded LSH candidates, then exact
-  *    Jaccard verification of candidates only — the scale path. Only
-  *    (doc, band, bucket) tuples shuffle; full texts never do. With
-  *    64 hashes / 16 bands the miss probability at Jaccard 0.9 is ~5e-8,
-  *    so verified output equals the exact pair set.
+  *    Jaccard verification of candidates only — the scale path. One row
+  *    per document end to end: gram sets, minima and band buckets are
+  *    computed map-side, so what shuffles is the (doc, band, bucket)
+  *    rows of the candidate self-join, the distinct candidate pairs, and
+  *    the per-document gram arrays the candidates join to for
+  *    verification; no per-gram row and no full text ever shuffles.
+  *    With 64 hashes / 16 bands the miss probability at Jaccard 0.9 is
+  *    ~5e-8, so verified output equals the exact pair set.
   *  - [[simhashPairs]]: 64-bit frequency-weighted SimHash computed
   *    map-only per doc, candidates by 16-bit band equality (pigeonhole:
   *    hamming ≤ 3 guarantees a shared band), verified by bit_count.
@@ -151,17 +158,19 @@ object Dedup {
     (r.getLong(0), r.getLong(1))
   }
 
-  /** Distinct word n-gram shingles per doc (docs shorter than n words
-    * produce none — Spark's sequence() would go descending on a negative
-    * span, hence the pre-filter).
+  /** (doc_id, grams): each document's word n-grams in text order (docs
+    * shorter than n words have none — Spark's sequence() would go
+    * descending on a negative span, hence the pre-filter).
     */
-  private def shingles(docs: DataFrame, n: Int): DataFrame =
+  private def ngrams(docs: DataFrame, n: Int): DataFrame =
     docs.select(col("doc_id"), split(col("text"), " ").as("w"))
       .filter(size(col("w")) >= n)
-      .select(col("doc_id"),
-        explode(expr(
-          s"transform(sequence(0, size(w) - $n), i -> concat_ws(' ', slice(w, i + 1, $n)))")).as("gram"))
-      .distinct()
+      .select(col("doc_id"), expr(
+        s"transform(sequence(0, size(w) - $n), i -> concat_ws(' ', slice(w, i + 1, $n)))").as("grams"))
+
+  /** Distinct (doc_id, gram) shingle rows. */
+  private def shingles(docs: DataFrame, n: Int): DataFrame =
+    ngrams(docs, n).select(col("doc_id"), explode(col("grams")).as("gram")).distinct()
 
   /** Document-frequency cap: drops shingles appearing in more than
     * `maxDf` documents BEFORE any self-join. A shingle shared by k docs
@@ -433,46 +442,79 @@ object Dedup {
       .select(col("doc_a"), col("doc_b"), col("dist"))
   }
 
-  /** MinHash+LSH candidates, exact-verified. Output identical to
-    * [[ngramPairs]] at the same threshold (up to the negligible LSH miss
-    * probability), but candidate generation touches only signatures.
+  /** One row per document: (doc_id, grams), the document's distinct word
+    * n-grams as an array — no explode, no shuffle without `maxDf`; with
+    * it, the [[dfCapped]] survivors are regrouped per document. Documents
+    * shorter than n words, and under `maxDf` documents whose every gram
+    * is capped, have no row. Precondition: doc ids are unique — rows
+    * sharing an id are signed and verified as separate documents here.
     */
-  /** (doc_id, band, bucket) LSH band signatures from hashed shingles —
-    * deterministic affine hash family over a >2^32 prime. All nHashes
-    * minima are computed as parallel aggregates of ONE groupBy — the
-    * shuffle carries (doc_id, gh) once, not nHashes× (a perm crossJoin
-    * would inflate shuffle volume 64× at corpus scale).
-    */
-  private def bandSignatures(gh: DataFrame, nHashes: Int, nBands: Int): DataFrame = {
-    val rowsPerBand = nHashes / nBands
-    val prime = 4294967311L
-    val mins = (0 until nHashes).map { i =>
-      val a = ((i * 2654435761L) % 1048573L) | 1L
-      val b = (i * 97531L + 12345L) % 1048573L
-      min((col("gh") * a + b) % prime).as(s"mh$i")
+  private def gramSets(docs: DataFrame, n: Int, maxDf: Option[Int]): DataFrame = {
+    val g = ngrams(docs, n).select(col("doc_id"), array_distinct(col("grams")).as("grams"))
+    maxDf match {
+      case None => g
+      case Some(_) =>
+        dfCapped(g.select(col("doc_id"), explode(col("grams")).as("gram")), maxDf)
+          .groupBy(col("doc_id")).agg(collect_set(col("gram")).as("grams"))
     }
-    val bandCols = (0 until nBands).map { bnd =>
-      val sigStr = concat_ws(",",
-        (0 until rowsPerBand).map(r => col(s"mh${bnd * rowsPerBand + r}").cast("string")): _*)
-      struct(lit(bnd).as("band"), xxhash64(lit(bnd), sigStr).as("bucket"))
-    }
-    gh.groupBy(col("doc_id"))
-      .agg(mins.head, mins.tail: _*)
-      .withColumn("bb", explode(array(bandCols: _*)))
-      .select(col("doc_id"), col("bb.band"), col("bb.bucket"))
   }
 
-  /** Shingles lifted to non-negative 32-bit hashes (murmur via Spark's
-    * `hash`) — the narrow frame every MinHash stage shuffles.
+  /** (doc_id, band, bucket) LSH rows in one map-side pass per document.
+    * Each gram is lifted to its non-negative 32-bit murmur hash (Spark's
+    * `hash`, seed 42); the nHashes minima come from a deterministic
+    * affine family over a >2^32 prime; each band's bucket is
+    * xxhash64(band, "m1,m2,...") chained from seed 42 the way Spark's
+    * `xxhash64` chains its arguments. The rows are bit-identical to the
+    * former groupBy-over-shingles formulation (DedupSpec keeps it as the
+    * oracle), so persisted signature stores stay valid.
     */
-  private def hashedShingles(docs: DataFrame, n: Int, maxDf: Option[Int]): DataFrame =
-    dfCapped(shingles(docs, n), maxDf)
-      .withColumn("gh", hash(col("gram")).cast("long") + 2147483648L)
+  private def bandRows(g: DataFrame, nHashes: Int, nBands: Int): DataFrame = {
+    val rowsPerBand = nHashes / nBands
+    val prime = 4294967311L
+    val as = Array.tabulate(nHashes)(i => ((i * 2654435761L) % 1048573L) | 1L)
+    val bs = Array.tabulate(nHashes)(i => (i * 97531L + 12345L) % 1048573L)
+    val buckets = udf { hs: Seq[Int] =>
+      val mins = Array.fill(nHashes)(Long.MaxValue)
+      hs.foreach { h =>
+        val gh = h + 2147483648L
+        var i = 0
+        while (i < nHashes) {
+          val v = (gh * as(i) + bs(i)) % prime
+          if (v < mins(i)) mins(i) = v
+          i += 1
+        }
+      }
+      Array.tabulate(nBands) { bnd =>
+        val sig = mins.slice(bnd * rowsPerBand, (bnd + 1) * rowsPerBand).mkString(",")
+        XxHash64Function.hash(UTF8String.fromString(sig), StringType,
+          XxHash64Function.hash(bnd, IntegerType, 42L))
+      }
+    }
+    g.select(col("doc_id"),
+      posexplode(buckets(transform(col("grams"), x => hash(x)))).as(Seq("band", "bucket")))
+  }
+
+  /** Exact Jaccard of the candidate pairs (id_a, id_b) at or above
+    * `threshold`: each pair meets the two per-document gram arrays and
+    * intersects them in place — no gram-level rows, no extra aggregate.
+    * `hint` marks the (corpus-scaled) gram-array join sides.
+    */
+  private def verified(candidates: DataFrame, g: DataFrame, threshold: Double,
+      hint: DataFrame => DataFrame = identity): DataFrame =
+    candidates
+      .join(hint(g.select(col("doc_id").as("id_a"), col("grams").as("ga"))), Seq("id_a"))
+      .join(hint(g.select(col("doc_id").as("id_b"), col("grams").as("gb"))), Seq("id_b"))
+      .withColumn("both", size(array_intersect(col("ga"), col("gb"))).cast("long"))
+      .withColumn("jaccard", col("both").cast("double") /
+        (size(col("ga")).cast("long") + size(col("gb")) - col("both")))
+      .filter(col("jaccard") >= threshold)
+      .select(col("id_a"), col("id_b"), col("jaccard"))
 
   /** The persistable signature artifact for a corpus — what a rolling
     * ingest keeps alongside the documents so new arrivals dedup against
     * the whole corpus WITHOUT reshingling it (see
-    * [[minhashPairsIncremental]]).
+    * [[minhashPairsIncremental]]). Doc ids must be unique (see
+    * [[gramSets]]).
     */
   def minhashSignatures(
       docs: DataFrame,
@@ -480,8 +522,16 @@ object Dedup {
       nHashes: Int = 64,
       nBands: Int = 16,
       maxDf: Option[Int] = None): DataFrame =
-    bandSignatures(hashedShingles(docs, n, maxDf), nHashes, nBands)
+    // the signing plan is narrow, so without this exchange a store is
+    // written as one file per input partition (measured on 50 documents
+    // at local[2]: 2 files and 7942 bytes instead of 1 file and 5181)
+    bandRows(gramSets(docs, n, maxDf), nHashes, nBands).repartition(col("doc_id"))
 
+  /** MinHash+LSH candidates, exact-verified. Output identical to
+    * [[ngramPairs]] at the same threshold (up to the negligible LSH miss
+    * probability), but candidate generation touches only signatures.
+    * Doc ids must be unique (see [[gramSets]]).
+    */
   def minhashPairs(
       docs: DataFrame,
       n: Int = 3,
@@ -489,20 +539,11 @@ object Dedup {
       nBands: Int = 16,
       threshold: Double = 0.5,
       maxDf: Option[Int] = None): DataFrame = {
-    // The shingle set feeds four consumers (doc sizes, the signature
-    // aggregate, both sides of verification). Recomputing it per consumer
-    // is measurably CHEAPER than persist(): each consumer gets a pruned,
-    // fully pipelined codegen plan, while caching materializes all ~n×L
-    // shingle strings, breaks stage fusion, and leaks storage across
-    // repeated calls.
-    val g = dfCapped(shingles(docs, n), maxDf)
-    // shingle → 32-bit murmur (Spark hash), lifted non-negative
-    val gh = g.withColumn("gh", hash(col("gram")).cast("long") + 2147483648L)
+    val g = gramSets(docs, n, maxDf)
+    val sigs = bandRows(g, nHashes, nBands)
 
-    val sigs = bandSignatures(gh, nHashes, nBands)
-
-    // size-gated pins (see pinLarge): the shingle frame estimate comes
-    // from one narrow text agg; the signature table is docs × nHashes
+    // size-gated pins (see pinLarge): the gram-array estimate comes from
+    // one narrow text agg; the signature table is docs × nHashes
     // fixed-width rows. NOT localCheckpointed (r12 measured): eager
     // pins of sigs + a candidate-pruned shingle frame re-ran q41 at
     // 1.48× the baseline min — each pin is a job barrier + storage
@@ -526,26 +567,12 @@ object Dedup {
       .select(col("sa.doc_id").as("id_a"), col("sb.doc_id").as("id_b"))
       .distinct()
 
-    // exact verification of candidates only. The shingle frame is
-    // corpus-PROPORTIONAL but Catalyst estimates it from the compressed
-    // text scan (explode doesn't scale the estimate), so near the
-    // broadcast threshold the planner can elect to broadcast gigabytes
-    // of in-memory shingles — the 100× probe hit exactly that (driver
-    // OOM building the broadcast). A corpus-scaled side must never be
-    // broadcast at ANY scale: pin it to sort-merge.
-    val sizes = g.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
-    val inter = candidates
-      .join(mpG(gh.select(col("doc_id").as("id_a"), col("gram"))), Seq("id_a"))
-      .join(mpG(gh.select(col("doc_id").as("id_b"), col("gram").as("gram_b"))), Seq("id_b"))
-      .filter(col("gram") === col("gram_b"))
-      .groupBy(col("id_a"), col("id_b"))
-      .agg(count(lit(1)).as("both"))
-    inter
-      .join(mpG(sizes.select(col("doc_id").as("id_a"), col("sz").as("na"))), Seq("id_a"))
-      .join(mpG(sizes.select(col("doc_id").as("id_b"), col("sz").as("nb"))), Seq("id_b"))
-      .withColumn("jaccard", col("both").cast("double") / (col("na") + col("nb") - col("both")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
+    // The gram arrays are corpus-PROPORTIONAL but Catalyst estimates
+    // them from the compressed text scan, so near the broadcast
+    // threshold the planner can elect to broadcast gigabytes of them —
+    // the 100× probe hit exactly that (driver OOM building the
+    // broadcast). Pin them to sort-merge whenever they could be big.
+    verified(candidates, g, threshold, mpG)
   }
 
   /** Incremental MinHash dedup: near-dup pairs TOUCHING a batch of new
@@ -558,8 +585,9 @@ object Dedup {
     *  - candidates come from joining the new signatures against the
     *    union store (new×new and new×old collide; old×old pairs cannot
     *    form because both sides of the join carry a new doc);
-    *  - exact Jaccard verification reshingles ONLY candidate documents —
-    *    a semi-join prune on the text table, not a corpus scan.
+    *  - exact Jaccard verification builds gram sets for candidate
+    *    documents ONLY — a semi-join prune on the text table, not a
+    *    corpus-wide shingling.
     *
     * Output equals `minhashPairs(old ∪ new)` restricted to pairs with a
     * new endpoint (DedupSpec holds them equal; q117's oracle is the
@@ -578,7 +606,7 @@ object Dedup {
     // (newSigs: probe side AND inside the union store; candidates: the
     // id extraction twice plus the verify join), so unlike minhashPairs'
     // symmetric self-join there is no ReusedExchange to ride —
-    // re-evaluation would re-run the signature aggregate ~6×. Both are
+    // re-evaluation would re-run the signature pass ~6×. Both are
     // (id, band, bucket)/(id, id) narrow: pin, don't recompute.
     //
     // Two pinning modes: localCheckpoint (default — executor-storage,
@@ -592,7 +620,7 @@ object Dedup {
     def pin(df: DataFrame, name: String): DataFrame =
       Pins.pin(df, name,
         org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK, checkpointDir)
-    val newSigs = pin(minhashSignatures(newDocs, n, nHashes, nBands), "_ckpt_sigs")
+    val newSigs = pin(bandRows(gramSets(newDocs, n, None), nHashes, nBands), "_ckpt_sigs")
     val allSigs = oldSigs.select(col("doc_id"), col("band"), col("bucket"))
       .unionByName(newSigs)
     val candidates = pin(newSigs.as("sa").join(allSigs.as("sb"),
@@ -608,27 +636,7 @@ object Dedup {
     val touched = newDocs.select(col("doc_id"), col("text"))
       .unionByName(oldDocs.select(col("doc_id"), col("text")))
       .join(candIds, Seq("doc_id"), "left_semi")
-    // The candidate-doc shingle frame feeds FOUR consumers (both verify
-    // sides and, via sizes, both size joins) on different plan branches;
-    // left lazy each one re-runs the corpus semi-join + reshingle (the
-    // r12 baseline plan repeated that subtree 6×, 40 parquet scans of
-    // the documents table in one query). It is bounded by the CANDIDATE
-    // set — the frame this operator exists to keep small — so pin it
-    // like the signature/candidate frames above.
-    val g = pin(shingles(touched, n), "_ckpt_shingles")
-    val sizes = g.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
-    val inter = candidates
-      .join(g.select(col("doc_id").as("id_a"), col("gram")), Seq("id_a"))
-      .join(g.select(col("doc_id").as("id_b"), col("gram").as("gram_b")), Seq("id_b"))
-      .filter(col("gram") === col("gram_b"))
-      .groupBy(col("id_a"), col("id_b"))
-      .agg(count(lit(1)).as("both"))
-    inter
-      .join(sizes.select(col("doc_id").as("id_a"), col("sz").as("na")), Seq("id_a"))
-      .join(sizes.select(col("doc_id").as("id_b"), col("sz").as("nb")), Seq("id_b"))
-      .withColumn("jaccard", col("both").cast("double") / (col("na") + col("nb") - col("both")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
+    verified(candidates, gramSets(touched, n, None), threshold)
   }
 
   /** 64-bit frequency-weighted SimHash of whitespace tokens. Map-only.

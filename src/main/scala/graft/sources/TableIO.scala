@@ -118,13 +118,16 @@ object TableIO {
       // this writer executes, so when the debug property is set, dump
       // the shaped write frame's formatted plan (slim Project →
       // RebalancePartitions → Sort → re-attached literals) before
-      // writing. Pure plan capture — no extra job.
+      // writing. Pure plan capture — no extra job. The file is keyed by
+      // the basename plus a hash of the full output path, so tables that
+      // share a basename under different parents keep their own dumps.
       sys.props.get("graft.write.plan.dir")
         .orElse(sys.env.get("GRAFT_WRITE_PLAN_DIR")).foreach { pd =>
         val d = java.nio.file.Paths.get(pd)
         java.nio.file.Files.createDirectories(d)
         val base = new org.apache.hadoop.fs.Path(baseDir).getName
-        java.nio.file.Files.write(d.resolve(s"write_$base.txt"),
+        val key = f"${baseDir.hashCode}%08x"
+        java.nio.file.Files.write(d.resolve(s"write_${base}_$key.txt"),
           toWrite.queryExecution.explainString(
             org.apache.spark.sql.execution.FormattedMode)
             .getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -232,11 +235,21 @@ object TableIO {
     * UTF8String ops instead of a java.util.regex matcher + String
     * conversion per row. Measured on the 15 M-row q36 read-back: the
     * regex made the consumer 2.2 s vs 1.0 s without it; substring_index
-    * removes most of that gap.
+    * removes most of that gap. Only the file-name component is parsed
+    * (the scan's `_metadata.file_name`, so `df` must read files
+    * directly, as [[readPartitioned]] does), and a name without "part-"
+    * (a foreign or renamed file) yields "", the regex's no-match value,
+    * never a fragment of the path. Cutting the name out of
+    * `input_file_name()` instead made the same read-back 5.7 s against
+    * 2.7 s (median of four warm runs each, local[4]).
     */
-  def withChunkId(df: DataFrame): DataFrame =
+  def withChunkId(df: DataFrame): DataFrame = {
+    val name = col("_metadata.file_name")
     df.withColumn("chunk_id",
-      substring_index(substring_index(input_file_name(), "part-", -1), "-", 1))
+      when(name.contains("part-"),
+        substring_index(substring_index(name, "part-", -1), "-", 1))
+        .otherwise(lit("")))
+  }
 
   /** Small-file compaction — the operational hazard of any long-lived
     * partitioned tree (incremental publishes accrete files; at 100 TB the

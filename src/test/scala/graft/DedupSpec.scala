@@ -1,6 +1,8 @@
 package graft
 
 import graft.operators.{Dedup, TextAnalysis}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 class DedupSpec extends AnyFunSuite {
@@ -65,6 +67,72 @@ class DedupSpec extends AnyFunSuite {
     val mh = Dedup.minhashPairs(docs, 3, 64, 16, 0.5).collect()
       .map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"))).toSet
     assert(mh == exactPairs)
+  }
+
+  /** The former signature formulation, kept as the oracle of
+    * [[Dedup.minhashSignatures]]: one row per distinct (doc, gram), the
+    * 64 minima as parallel aggregates of one groupBy, the band buckets
+    * as Spark's `xxhash64` over the comma-joined minima.
+    */
+  private def oracleSignatures(docs: DataFrame, maxDf: Option[Int],
+      n: Int = 3, nHashes: Int = 64, nBands: Int = 16): DataFrame = {
+    val shingles = docs.select(col("doc_id"), split(col("text"), " ").as("w"))
+      .filter(size(col("w")) >= n)
+      .select(col("doc_id"), explode(expr(
+        s"transform(sequence(0, size(w) - $n), i -> concat_ws(' ', slice(w, i + 1, $n)))")).as("gram"))
+      .distinct()
+    val g = maxDf.fold(shingles) { cap =>
+      val rare = shingles.groupBy(col("gram")).agg(count(lit(1)).as("df"))
+        .filter(col("df") <= cap).select(col("gram"))
+      shingles.join(rare, Seq("gram")).select(col("doc_id"), col("gram"))
+    }
+    val gh = g.withColumn("gh", hash(col("gram")).cast("long") + 2147483648L)
+    val rowsPerBand = nHashes / nBands
+    val prime = 4294967311L
+    val mins = (0 until nHashes).map { i =>
+      val a = ((i * 2654435761L) % 1048573L) | 1L
+      val b = (i * 97531L + 12345L) % 1048573L
+      min((col("gh") * a + b) % prime).as(s"mh$i")
+    }
+    val bandCols = (0 until nBands).map { bnd =>
+      val sigStr = concat_ws(",",
+        (0 until rowsPerBand).map(r => col(s"mh${bnd * rowsPerBand + r}").cast("string")): _*)
+      struct(lit(bnd).as("band"), xxhash64(lit(bnd), sigStr).as("bucket"))
+    }
+    gh.groupBy(col("doc_id"))
+      .agg(mins.head, mins.tail: _*)
+      .withColumn("bb", explode(array(bandCols: _*)))
+      .select(col("doc_id"), col("bb.band"), col("bb.bucket"))
+  }
+
+  test("minhashSignatures rows are bit-identical to the groupBy-over-shingles oracle") {
+    import spark.implicits._
+    def rows(df: DataFrame): Seq[(Long, Int, Long)] =
+      df.select(col("doc_id"), col("band"), col("bucket")).as[(Long, Int, Long)]
+        .collect().toSeq.sorted
+    val header = "terms of service apply to this page"
+    val edges = Seq(
+      (1L, ""),                                        // no words
+      (2L, "too short"),                               // fewer than n words
+      (3L, "double  spaces   make empty  tokens here"),
+      (4L, "naïve café über straße 東京 タワー ñandú"),   // non-ASCII
+      (5L, "x y x y x y x y x y"),                      // repeated grams
+      (6L, header),                                    // every gram capped below
+      (7L, s"$header alpha beta gamma"),
+      (8L, s"$header delta epsilon zeta"),
+      (9L, "x y x y z w"))
+      .toDF("doc_id", "text")
+    val fixture = docs.select(col("doc_id"), col("text"))
+    for ((corpus, maxDf) <- Seq((edges, None), (edges, Some(2)),
+        (fixture, None), (fixture, Some(2)))) {
+      val want = rows(oracleSignatures(corpus, maxDf))
+      val got = rows(Dedup.minhashSignatures(corpus, maxDf = maxDf))
+      assert(want.nonEmpty)
+      assert(got == want, s"maxDf=$maxDf: ${got.diff(want).take(3)} vs ${want.diff(got).take(3)}")
+    }
+    // the edge cases are live: short docs and the all-capped doc sign nothing
+    assert(rows(Dedup.minhashSignatures(edges)).map(_._1).distinct == Seq(3L, 4L, 5L, 6L, 7L, 8L, 9L))
+    assert(!rows(Dedup.minhashSignatures(edges, maxDf = Some(2))).exists(_._1 == 6L))
   }
 
   test("simhash: banding is complete for hamming ≤ 3 (pigeonhole) and recalls most planted pairs") {

@@ -151,6 +151,49 @@ class IoSpec extends AnyFunSuite {
     }
   }
 
+  test("chunk_id is parsed from the file name alone: a foreign-named file reads as \"\"") {
+    import org.apache.hadoop.fs.Path
+    // a "part-" in a parent directory must not leak into any chunk id
+    val dir = "/tmp/graft_chunk_part-9-spec"
+    TableIO.writePartitioned(TableIO.readPartitioned(spark, outDir), dir,
+      Seq("origin_id", "destination_id"))
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val it = fs.listFiles(new Path(dir), true)
+    var part: Path = null
+    while (it.hasNext) {
+      val p = it.next().getPath
+      if (p.getName.startsWith("part-")) part = p
+    }
+    val foreign = new Path(part.getParent, "extra.parquet")
+    org.apache.hadoop.fs.FileUtil.copy(fs, part, fs, foreign, false, spark.sparkContext.hadoopConfiguration)
+    val ids = TableIO.withChunkId(TableIO.readPartitioned(spark, dir))
+      .select(input_file_name(), col("chunk_id")).distinct().collect()
+      .map(r => new Path(r.getString(0)).getName -> r.getString(1)).toMap
+    assert(ids("extra.parquet") == "", ids.toString)
+    val parts = ids - "extra.parquet"
+    assert(parts.nonEmpty && parts.forall { case (name, id) =>
+      id.matches("\\d+") && name.startsWith(s"part-$id-") }, parts.toString)
+  }
+
+  test("write-plan dumps of two tables sharing a basename do not overwrite each other") {
+    val pd = new java.io.File("/tmp/graft_write_plan_spec")
+    org.apache.commons.io.FileUtils.deleteDirectory(pd)
+    val frame = TableIO.readPartitioned(spark, outDir)
+    val key = "graft.write.plan.dir"
+    val prev = sys.props.get(key)
+    sys.props(key) = pd.getPath
+    try Seq("a", "b").foreach { p =>
+      TableIO.writePartitioned(frame, s"/tmp/graft_write_plan_$p/graft_wp_table",
+        Seq("origin_id", "destination_id"))
+    } finally prev.fold(sys.props.remove(key))(v => sys.props.put(key, v))
+    val dumps = pd.listFiles().filter(_.getName.startsWith("write_graft_wp_table_"))
+    assert(dumps.length == 2, dumps.map(_.getName).toSeq)
+    dumps.foreach { f =>
+      val txt = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+      assert(txt.contains("REBALANCE_PARTITIONS_BY_COL"), txt.take(500))
+    }
+  }
+
   test("null durations round-trip (missing_pairs stay representable in times)") {
     val back = TableIO.readPartitioned(spark, outDir)
     assert(back.filter(col("duration_sec").isNull).count() == 1)
