@@ -5,7 +5,7 @@ import org.apache.spark.sql.SparkSession
 /** Session factory encoding the engine's scale defaults.
   *
   * Tuned for the target deployment (many-executor cluster over ~100 TB of
-  * zstd Parquet) while remaining correct on `local[32]`:
+  * zstd Parquet) while remaining correct on a single node:
   *  - AQE on: runtime coalescing of shuffle partitions + skew-join splitting
   *    replaces hand-tuned chunk geometry (the reference sizes its work grid
   *    statically — /root/reference/data/params.yaml:14-29).
@@ -16,10 +16,17 @@ import org.apache.spark.sql.SparkSession
   *    `hive_types_autocast = false` — data/src/create_public_files.py:79).
   *  - session timezone pinned UTC (reference timestamps are UTC —
   *    data/src/calculate_times.py:110).
+  *  - checkpoint files are reclaimed by the ContextCleaner once their
+  *    frame is unreachable (reliable [[graft.operators.Pins]] pins).
   */
 object GraftSession {
+  /** Local thread count and shuffle width: `SPARK_GRAFT_CPUS`, else the
+    * cores this JVM sees.
+    */
+  private val cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+    Runtime.getRuntime.availableProcessors.toString)
+
   def builder(appName: String = "graft", master: String = ""): SparkSession.Builder = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val b = SparkSession
       .builder()
       .appName(appName)
@@ -43,6 +50,7 @@ object GraftSession {
       .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
         sys.env.getOrElse("SPARK_GRAFT_SHJ_THRESHOLD", "0"))
       .config("spark.ui.enabled", "false")
+      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
     if (master.nonEmpty) b.master(master) else b
   }
 
@@ -56,7 +64,6 @@ object GraftSession {
     if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft-out" else "/tmp"
 
   def local(appName: String = "graft"): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val b = builder(appName, s"local[$cpus]")
     // Single-node runs: put shuffle/spill files on tmpfs when present.
     // On a real cluster these land on executor-local disks; here the

@@ -262,7 +262,6 @@ object Dedup {
         docs.select(col("doc_id"),
           explode(array_distinct(split(col("text"), " "))).as("tok"))
       else shingles(docs, n).withColumnRenamed("gram", "tok"),
-      "pj_toks",
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
     // the eager checkpoint makes an EXACT size measurement nearly free
     // (one agg over cached blocks): gate every corpus-scaled pin on it
@@ -591,7 +590,9 @@ object Dedup {
     *
     * Output equals `minhashPairs(old ∪ new)` restricted to pairs with a
     * new endpoint (DedupSpec holds them equal; q117's oracle is the
-    * exact n-gram SQL under the same restriction).
+    * exact n-gram SQL under the same restriction). On a cluster call
+    * `sparkContext.setCheckpointDir` first: the two pins below then
+    * survive executor loss as reliable checkpoint files (see [[Pins]]).
     */
   def minhashPairsIncremental(
       newDocs: DataFrame,
@@ -600,36 +601,23 @@ object Dedup {
       n: Int = 3,
       nHashes: Int = 64,
       nBands: Int = 16,
-      threshold: Double = 0.5,
-      checkpointDir: Option[String] = None): DataFrame = {
+      threshold: Double = 0.5): DataFrame = {
     // Both narrow frames feed multiple consumers on DIFFERENT join sides
     // (newSigs: probe side AND inside the union store; candidates: the
     // id extraction twice plus the verify join), so unlike minhashPairs'
     // symmetric self-join there is no ReusedExchange to ride —
     // re-evaluation would re-run the signature pass ~6×. Both are
     // (id, band, bucket)/(id, id) narrow: pin, don't recompute.
-    //
-    // Two pinning modes: localCheckpoint (default — executor-storage,
-    // right for single-node and short-lived jobs) vs a parquet round-trip
-    // through `checkpointDir` (the signature store's filesystem). On a
-    // real cluster prefer the directory: localCheckpoint blocks lose
-    // lineage, so one executor loss kills the job, and pinned blocks
-    // squat on executor storage for the session; the store-side copy is
-    // recomputable-from-disk, survives executor churn, and lands next to
-    // the state the rolling ingest already maintains.
-    def pin(df: DataFrame, name: String): DataFrame =
-      Pins.pin(df, name,
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK, checkpointDir)
-    val newSigs = pin(bandRows(gramSets(newDocs, n, None), nHashes, nBands), "_ckpt_sigs")
+    val newSigs = Pins.pin(bandRows(gramSets(newDocs, n, None), nHashes, nBands))
     val allSigs = oldSigs.select(col("doc_id"), col("band"), col("bucket"))
       .unionByName(newSigs)
-    val candidates = pin(newSigs.as("sa").join(allSigs.as("sb"),
+    val candidates = Pins.pin(newSigs.as("sa").join(allSigs.as("sb"),
         col("sa.band") === col("sb.band") && col("sa.bucket") === col("sb.bucket") &&
           col("sa.doc_id") =!= col("sb.doc_id"))
       .select(
         least(col("sa.doc_id"), col("sb.doc_id")).as("id_a"),
         greatest(col("sa.doc_id"), col("sb.doc_id")).as("id_b"))
-      .distinct(), "_ckpt_candidates")
+      .distinct())
     val candIds = candidates.select(col("id_a").as("doc_id"))
       .union(candidates.select(col("id_b").as("doc_id")))
       .distinct()
@@ -689,9 +677,9 @@ object Dedup {
       idB: String = "id_b",
       maxIters: Int = 25): DataFrame = {
     val e = Pins.pin(pairs.select(col(idA).as("src"), col(idB).as("dst"))
-      .union(pairs.select(col(idB).as("src"), col(idA).as("dst"))), "cc_edges")
+      .union(pairs.select(col(idB).as("src"), col(idA).as("dst"))))
     var labels = Pins.pin(e.select(col("src").as("id")).distinct()
-      .select(col("id"), col("id").as("cluster")), "cc_labels")
+      .select(col("id"), col("id").as("cluster")))
     var changed = 1L
     var i = 0
     while (changed > 0 && i < maxIters) {
@@ -707,8 +695,7 @@ object Dedup {
         .join(labels.select(col("id").as("pcluster"), col("cluster").as("gc")),
           Seq("pcluster"), "left")
         .select(col("id"), col("cluster"),
-          least(col("pcluster"), coalesce(col("gc"), col("pcluster"))).as("ncluster")),
-        "cc_round")
+          least(col("pcluster"), coalesce(col("gc"), col("pcluster"))).as("ncluster")))
       changed = next.filter(col("ncluster") =!= col("cluster")).count()
       labels = next.select(col("id"), col("ncluster").as("cluster"))
       i += 1

@@ -99,33 +99,27 @@ object GraphOps {
     * (eager localCheckpoint): round i references round i−1 three times
     * (its own copy plus both sides of the degree union), so an unpruned
     * lineage is a 3^rounds plan tree and Catalyst analysis, not the
-    * data, becomes the cost. On a cluster prefer a reliable
-    * checkpoint dir (executor loss invalidates localCheckpoint blocks —
-    * same trade documented at [[Dedup.minhashPairsIncremental]]).
+    * data, becomes the cost. On a cluster call
+    * `sparkContext.setCheckpointDir` first: executor loss invalidates
+    * localCheckpoint blocks, reliable checkpoint files survive it (see
+    * [[Pins]]).
     */
-  def kCore(edges: DataFrame, k: Int, rounds: Int,
-      checkpointDir: Option[String] = None): DataFrame = {
+  def kCore(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 1 && rounds >= 1 && rounds <= 50, s"bad k=$k rounds=$rounds")
     val spark = edges.sparkSession
     import spark.implicits._
-    // reliable mode (cluster use): round frames persist to storage and
-    // survive executor loss; default localCheckpoint is the single-node
-    // fast path — same trade as Dedup.minhashPairsIncremental
-    def pin(df: DataFrame, round: Int): DataFrame =
-      Pins.pin(df, s"_kcore_r$round",
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK, checkpointDir)
-    var e = pin(edges
+    var e = Pins.pin(edges
       .select(least($"src", $"dst").cast("long").as("u"),
               greatest($"src", $"dst").cast("long").as("v"))
       .filter($"u" =!= $"v")
-      .distinct(), 0)
-    for (r <- 1 to rounds) {
+      .distinct())
+    for (_ <- 1 to rounds) {
       val deg = e.select($"u".as("node")).union(e.select($"v".as("node")))
         .groupBy($"node").agg(count(lit(1)).as("deg"))
       val keep = deg.filter($"deg" >= k).select($"node")
-      e = pin(e.join(keep.select($"node".as("u")), Seq("u"), "left_semi")
+      e = Pins.pin(e.join(keep.select($"node".as("u")), Seq("u"), "left_semi")
         .join(keep.select($"node".as("v")), Seq("v"), "left_semi")
-        .select($"u", $"v"), r)
+        .select($"u", $"v"))
     }
     e.select($"u".as("node")).union(e.select($"v".as("node")))
       .groupBy($"node").agg(count(lit(1)).as("core_deg"))
@@ -156,25 +150,21 @@ object GraphOps {
     * frames pin like [[kCore]]'s (lineage control + executor-loss
     * trade documented there).
     */
-  def labelPropagation(edges: DataFrame, rounds: Int,
-      checkpointDir: Option[String] = None): DataFrame = {
+  def labelPropagation(edges: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 1 && rounds <= 50, s"bad rounds $rounds")
     val spark = edges.sparkSession
     import spark.implicits._
-    def pin(df: DataFrame, round: Int): DataFrame =
-      Pins.pin(df, s"_lpa_r$round",
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK, checkpointDir)
     val e0 = edges
       .select(least($"src", $"dst").cast("long").as("u"),
               greatest($"src", $"dst").cast("long").as("v"))
       .filter($"u" =!= $"v")
       .distinct()
     // both directions: messages flow along every incidence
-    val und = pin(e0.select($"u".as("a"), $"v".as("b"))
-      .union(e0.select($"v".as("a"), $"u".as("b"))), 0)
+    val und = Pins.pin(e0.select($"u".as("a"), $"v".as("b"))
+      .union(e0.select($"v".as("a"), $"u".as("b"))))
     val nodes = und.select($"a".as("node")).distinct()
     var labels = nodes.select($"node", $"node".as("label"))
-    for (r <- 1 to rounds) {
+    for (_ <- 1 to rounds) {
       val counts = und.join(labels, und("b") === labels("node"))
         .groupBy($"a", $"label").agg(count(lit(1)).as("c"))
       // order-independent argmax: lexicographic struct min over
@@ -184,8 +174,8 @@ object GraphOps {
         .select($"a".as("node"), $"m.l".as("label"))
       // every node has a neighbor by construction (nodes come from
       // edges), but stay total: a node with no message keeps its label
-      labels = pin(nodes.join(best, Seq("node"), "left")
-        .select($"node", coalesce($"label", $"node").as("label")), r)
+      labels = Pins.pin(nodes.join(best, Seq("node"), "left")
+        .select($"node", coalesce($"label", $"node").as("label")))
     }
     labels
   }

@@ -130,72 +130,4 @@ object Sessionize {
     finally q.stop()
     spark.table(queryName)
   }
-
-  // Ev + an event-time column for the watermark (state-TTL variant)
-  final case class EvT(user_id: Long, event_id: Long, us: Long, vc: Long,
-      tsc: java.sql.Timestamp)
-
-  /** State-TTL variant of [[streaming]]: the watermark drives an
-    * event-time timeout on each user's open-session state, so idle
-    * sessions are *flushed by the engine* (and their state evicted)
-    * instead of lingering forever — the property that keeps the state
-    * store bounded on an unbounded 100 TB stream. A timed-out state emits
-    * its session exactly as the gap logic would have; only sessions still
-    * inside the gap window at end-of-watermark remain unflushed.
-    */
-  def streamingWithTTL(
-      spark: SparkSession, sfDir: String,
-      queryName: String = "graft_sessions_ttl"): DataFrame = {
-    import spark.implicits._
-    val schema = graft.Tables.eventsRawSchema(spark, sfDir)
-    val src = graft.Tables.normalizeEventTs(spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(sfDir))
-      .select(
-        col("user_id"), col("event_id"),
-        expr("ts div 1000").as("us"),
-        expr("CAST(round(value * 100, 0) AS LONG)").as("vc"),
-        expr("timestamp_micros(ts div 1000)").as("tsc"))
-      .withWatermark("tsc", "0 seconds")
-      .as[EvT]
-
-    val out = src
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-        (user: Long, evs: Iterator[EvT], state: GroupState[Open]) => {
-          if (state.hasTimedOut) {
-            // TTL fired: the open session's gap window passed the
-            // watermark — flush it and evict the state.
-            val o = state.get
-            state.remove()
-            Iterator.single(SessionRow(user, o.sessionId, o.startUs / 1000000L, o.n, o.cents / 100.0))
-          } else {
-            val sorted = evs.toVector.sortBy(e => (e.us, e.event_id))
-            var open = state.getOption
-            val closed = Vector.newBuilder[SessionRow]
-            sorted.foreach { e =>
-              open match {
-                case Some(o) if e.us - o.lastUs <= GapUs =>
-                  open = Some(o.copy(lastUs = e.us, n = o.n + 1, cents = o.cents + e.vc))
-                case Some(o) =>
-                  closed += SessionRow(user, o.sessionId, o.startUs / 1000000L, o.n, o.cents / 100.0)
-                  open = Some(Open(o.sessionId + 1, e.us, e.us, 1, e.vc))
-                case None =>
-                  open = Some(Open(1, e.us, e.us, 1, e.vc))
-              }
-            }
-            open.foreach { o =>
-              state.update(o)
-              // flush when the watermark passes the end of the gap window
-              state.setTimeoutTimestamp(o.lastUs / 1000L + GapUs / 1000L)
-            }
-            closed.result().iterator
-          }
-        })
-
-    val q = out.writeStream.outputMode("append")
-      .format("memory").queryName(queryName).start()
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(queryName)
-  }
 }

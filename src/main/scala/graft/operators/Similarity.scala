@@ -146,104 +146,13 @@ object Similarity {
       .select(col("query_id"), col("neighbor_id"), col("cosine"), col("rnk"))
   }
 
-  /** IVF (inverted-file) ANN — the other scale path: a coarse quantizer
-    * (Lloyd iterations, distributed assignment + per-dimension mean)
-    * partitions the corpus into cells; queries probe the nProbe nearest
-    * cells and exact-rerank only those cells' vectors. Unlike LSH the
-    * candidate count per query is explicitly bounded by cell sizes, which
-    * is what you want when the corpus is 100 TB and skewed.
-    */
-  def ivfTopK(
-      corpus: DataFrame,
-      queries: DataFrame,
-      k: Int,
-      nCells: Int = 16,
-      nProbe: Int = 4,
-      iters: Int = 2): DataFrame = {
-    def dist2(c: Array[Float], v: Seq[Float]): Double = {
-      var s = 0.0; var i = 0
-      while (i < c.length) { val d = c(i) - v(i); s += d.toDouble * d; i += 1 }
-      s
-    }
-    def nearest(cs: Array[Array[Float]], v: Seq[Float], n: Int): Seq[Int] =
-      cs.indices.sortBy(i => dist2(cs(i), v)).take(n)
-
-    // kmeans++ init on a deterministic modulo sample (the scalable
-    // sketch-then-seed pattern: the sample bounds driver memory at any
-    // corpus size; a seeded rng makes the init reproducible). D²-weighted
-    // seeding spreads cells far better than naive lowest-id picks, which
-    // directly bounds the worst-case cell population the probe step scans.
-    val n = corpus.count()
-    val step = math.max(1L, n / 2048L)
-    val sample: Array[Array[Float]] = corpus
-      .filter(col("vec_id") % step === 0)
-      .orderBy("vec_id")
-      .select("embedding").collect().map(_.getSeq[Float](0).toArray)
-    var centroids: Array[Array[Float]] = {
-      val rnd = new java.util.Random(42L)
-      val first = sample(rnd.nextInt(sample.length))
-      val centers = scala.collection.mutable.ArrayBuffer(first)
-      val d2s = Array.tabulate(sample.length)(i => dist2(first, sample(i).toSeq))
-      while (centers.length < math.min(nCells, sample.length)) {
-        val total = d2s.sum
-        var target = rnd.nextDouble() * total
-        var pick = 0
-        while (pick < d2s.length - 1 && target > d2s(pick)) { target -= d2s(pick); pick += 1 }
-        val c = sample(pick)
-        centers += c
-        var i = 0
-        while (i < d2s.length) {
-          d2s(i) = math.min(d2s(i), dist2(c, sample(i).toSeq)); i += 1
-        }
-      }
-      centers.toArray
-    }
-
-    for (_ <- 1 to iters) {
-      val bc = centroids
-      val assign = udf((v: Seq[Float]) => nearest(bc, v, 1).head)
-      val means = corpus
-        .withColumn("cell", assign(col("embedding")))
-        .select(col("cell"), posexplode(col("embedding")))
-        .groupBy(col("cell"), col("pos"))
-        .agg(avg(col("col")).as("m"))
-        .collect()
-      val dim = centroids.head.length
-      val next = centroids.map(_.clone())
-      means.foreach { r =>
-        next(r.getAs[Int]("cell"))(r.getAs[Int]("pos")) = r.getAs[Double]("m").toFloat
-      }
-      centroids = next
-    }
-
-    val bc = centroids
-    val assignOne = udf((v: Seq[Float]) => nearest(bc, v, 1).head)
-    val assignProbe = udf((v: Seq[Float]) => nearest(bc, v, nProbe))
-    val cells = corpus
-      .select(col("vec_id").as("neighbor_id"), col("embedding").as("cv"))
-      .withColumn("cell", assignOne(col("cv")))
-    val probes = queries
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-      .withColumn("cell", explode(assignProbe(col("qv"))))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    probes.join(cells, Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .dropDuplicates("query_id", "neighbor_id")
-      .withColumn("cosine",
-        cosine(col("qv"), col("cv"), vecNorm(col("qv")), vecNorm(col("cv"))))
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("cosine"), col("rnk"))
-  }
-
   /** IVF with a *seeded* coarse quantizer: the `nCells` lowest-id corpus
     * vectors are the cell centers directly (no Lloyd iterations). Fully
     * distributed — assignment is a broadcast join + argmin, no driver
     * collect — and fully deterministic: distances reduce to three
     * [[FloatDotProduct]]s via ‖a−b‖² = ‖a‖² + ‖b‖² − 2a·b, so cell
     * assignment, probing, and rerank are all bit-reproducible in SQL and
-    * the output is oracle-checkable (unlike the iterative [[ivfTopK]]).
+    * the output is oracle-checkable.
     * Ties in the argmin break by cell id.
     */
   def ivfTopKSeeded(
@@ -533,7 +442,7 @@ object Similarity {
   // Persistent ANN index — the dense counterpart of TextRetrieval's
   // inverted index: ivfTopKSeeded/pqTopK recompute cell assignment /
   // codes for the WHOLE corpus inside every call; at 100 TB that is a
-  // corpus scan per query batch. buildIvfIndex/buildPqIndex pay it ONCE
+  // corpus scan per query batch. buildIvfIndex/buildIvfPqIndex pay it ONCE
   // into TxLog tables; queries encode only themselves and scan the
   // manifest-pruned candidate slice.
   // ------------------------------------------------------------------
@@ -544,7 +453,7 @@ object Similarity {
       lit(2.0) * vecDot(v, s).cast("double")
 
   /** Nearest `nNear` of the broadcast `seeds` per vector — the
-    * [[ivfTopKSeeded]] assignment, shared by build / append / query so
+    * [[ivfTopKSeeded]] assignment, shared by build and query so
     * all three are bit-consistent. Ties break by cell id.
     */
   private def seededAssign(df: DataFrame, seeds: DataFrame, idAs: String,
@@ -567,13 +476,6 @@ object Similarity {
     *    nearest cell's inverted list, committed ONE BATCH PER CELL
     *    ([[graft.sources.TxLog.commitPartitioned]]) so a probe's cells
     *    manifest-prune to exactly the touched lists.
-    *
-    * Centroids FREEZE at build time — appends encode deltas against
-    * them (the FAISS contract: assignment stays consistent so old lists
-    * never rewrite; re-train by [[buildIvfIndex]] when drift measured
-    * on appended data warrants it — the recall/rebuild trade is the
-    * operator's documented knob, not something maintenance silently
-    * decides).
     */
   def buildIvfIndex(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, emb: DataFrame, nCells: Int = 16): Unit = {
@@ -588,140 +490,6 @@ object Similarity {
       seededAssign(emb, seeds, "vec_id", "embedding", 1), "cell")
   }
 
-  /** Incremental IVF maintenance: encode `newEmb` (vec_ids disjoint
-    * from the indexed corpus) against the FROZEN centroids and append
-    * the delta's per-cell batches — old lists carry verbatim, O(delta)
-    * write. A cell probe then keeps that cell's old batch AND its delta
-    * batches (point stats match both), so queries stay exact.
-    */
-  def appendIvfIndex(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, newEmb: DataFrame): Unit = {
-    import graft.sources.TxLog
-    val seeds = TxLog.read(spark, s"$indexDir/centroids")
-    TxLog.commitPartitioned(spark, s"$indexDir/cells",
-      seededAssign(newEmb, seeds, "vec_id", "embedding", 1), "cell",
-      append = true)
-  }
-
-  /** Measure-then-act maintenance for a cell-partitioned index table
-    * (the `TxLog.autoCluster` discipline for the ANN families, round-10
-    * — symmetric with `TextRetrieval.autoCompactIndex`): every append
-    * epoch adds one batch per touched cell, so a cell probe reads
-    * 1 + n_appends batches; the amplification is the max number of
-    * manifest lines any single cell value appears in — one KB manifest
-    * read, no file I/O. Past `maxBatchesPerCell` the table recompacts
-    * to one-batch-per-cell (commitPartitioned replace — the frozen
-    * quantizers are untouched and history stays time-travelable). A
-    * line whose cell stats are not a point value is unmeasurable and
-    * counts as degraded: the recompaction restores a measurable layout,
-    * so the heal is one-time, never a loop (the autoPurge shape).
-    */
-  private def autoCompactCellTable(spark: org.apache.spark.sql.SparkSession,
-      dir: String, maxBatchesPerCell: Int): Boolean = {
-    import graft.sources.TxLog
-    require(maxBatchesPerCell >= 1, s"bad maxBatchesPerCell $maxBatchesPerCell")
-    val entries = TxLog.manifest(spark, dir)
-    val mult = scala.collection.mutable.Map.empty[String, Int]
-    var unmeasurable = false
-    entries.foreach { case (_, st) =>
-      st.get("cell") match {
-        case Some(cs) if cs.min == cs.max =>
-          mult(cs.min) = mult.getOrElse(cs.min, 0) + 1
-        case _ => unmeasurable = true
-      }
-    }
-    val degraded = unmeasurable || mult.valuesIterator.exists(_ > maxBatchesPerCell)
-    degraded && {
-      TxLog.commitPartitioned(spark, dir, TxLog.read(spark, dir), "cell")
-      true
-    }
-  }
-
-  /** [[autoCompactCellTable]] over the IVF index's inverted lists. */
-  def autoCompactIvfIndex(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, maxBatchesPerCell: Int = 2): Boolean =
-    autoCompactCellTable(spark, s"$indexDir/cells", maxBatchesPerCell)
-
-  /** MEASURED quantizer drift — the number behind [[buildIvfIndex]]'s
-    * documented "re-train when measured drift warrants it" knob: the
-    * mean squared quantization error (distance to the assigned FROZEN
-    * centroid) of everything appended since the build, relative to the
-    * build-time corpus's own error. In-distribution appends hold the
-    * ratio near 1 (they quantize as well as the data the centroids
-    * were picked from); a drifted stream lands far from every frozen
-    * cell and the ratio climbs — recall is degrading even though every
-    * committed answer stays exact for what the index CONTAINS. The
-    * appended set comes from the cells table's own change feed
-    * (metadata-classified appends — never a corpus diff). None when
-    * nothing was appended, or when the measurement window is no longer
-    * replayable (vacuum reclaimed it) — pass `sinceVersion` to
-    * RE-ANCHOR the baseline after a compaction or vacuum (e.g. the
-    * post-maintenance version): drift is always measured against what
-    * the index held AT the anchor, and the anchor is the caller's
-    * statement of "the corpus the current centroids were judged good
-    * for".
-    */
-  def ivfDriftRatio(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, sinceVersion: Long = 1L): Option[Double] = {
-    import graft.sources.TxLog
-    require(sinceVersion >= 1L, s"bad sinceVersion $sinceVersion")
-    val cellsDir = s"$indexDir/cells"
-    val latest = TxLog.latestVersion(spark, cellsDir)
-    if (latest <= sinceVersion) return None
-    val seeds = TxLog.read(spark, s"$indexDir/centroids")
-    def mse(df: DataFrame): Option[Double] = {
-      val r = df.join(broadcast(seeds), Seq("cell"))
-        .agg(avg(seedD2(col("embedding"), col("sv")))).head()
-      if (r.isNullAt(0)) None else Some(r.getDouble(0))
-    }
-    try {
-      val appended = TxLog.changeFeed(spark, cellsDir, sinceVersion, latest)
-        .filter(col("_change_type") === "insert")
-        .select(col("embedding"), col("cell"))
-      for {
-        newErr <- mse(appended)
-        builtErr <- mse(TxLog.read(spark, cellsDir, asOf = Some(sinceVersion)))
-        if builtErr > 0.0
-      } yield newErr / builtErr
-    } catch {
-      // anchor no longer replayable (vacuumed window): unmeasurable,
-      // not zero — the caller re-anchors at a retained version
-      case _: IllegalStateException => None
-      case _: IllegalArgumentException => None
-    }
-  }
-
-  /** Policy wrapper: has appended-data drift outgrown the frozen
-    * quantizer? The caller rebuilds ([[buildIvfIndex]]) on true —
-    * maintenance never silently retrains (the assignment change would
-    * invalidate asOf time travel's meaning), it MEASURES and reports.
-    */
-  def shouldRetrainIvf(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, maxDriftRatio: Double = 2.0,
-      sinceVersion: Long = 1L): Boolean = {
-    require(maxDriftRatio > 0.0, s"bad maxDriftRatio $maxDriftRatio")
-    ivfDriftRatio(spark, indexDir, sinceVersion).exists(_ > maxDriftRatio)
-  }
-
-  /** [[autoCompactCellTable]] over the IVF-PQ index's code lists. When
-    * it fires, the vec_id-clustered `vectors` table recompacts too —
-    * BOTH because appends fragmented it the same way AND because
-    * `ivfPqTopKIndexed`'s asOf contract names ONE version for the
-    * cellcodes/vectors pair: compacting one table alone would shift
-    * what a version number means on the other (the lockstep rule
-    * `compactIndex` follows for the BM25 four-table family).
-    */
-  def autoCompactIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, maxBatchesPerCell: Int = 2,
-      vectorBatches: Int = 16): Boolean = {
-    import graft.sources.TxLog
-    autoCompactCellTable(spark, s"$indexDir/cellcodes", maxBatchesPerCell) && {
-      TxLog.commitClustered(spark, s"$indexDir/vectors",
-        TxLog.read(spark, s"$indexDir/vectors"), Seq("vec_id"), vectorBatches)
-      true
-    }
-  }
-
   /** [[ivfTopKSeeded]] answered from a prebuilt [[buildIvfIndex]] —
     * query time encodes ONLY the queries (one broadcast of nCells
     * centroids) and scans ONLY the probed cells' inverted lists
@@ -734,15 +502,12 @@ object Similarity {
       indexDir: String, queries: DataFrame, k: Int,
       nProbe: Int = 4, asOf: Option[Long] = None): DataFrame = {
     import graft.sources.TxLog
-    // INDEX TIME TRAVEL: centroids FREEZE at build (v1 forever — the
-    // append contract), so `asOf` names a cells-table version alone:
-    // querying the pre-append lists reproduces the recompute over the
-    // pre-append corpus exactly (IndexSpec pins it).
+    // `asOf` names a cells-table version; the centroids are written
+    // once per build
     val seeds = TxLog.read(spark, s"$indexDir/centroids")
     // query-bounded; pinned because both the probed-cell collect and
     // the candidate join consume it
-    val probes = Pins.pin(
-      seededAssign(queries, seeds, "query_id", "qv", nProbe), "ann_probes")
+    val probes = Pins.pin(seededAssign(queries, seeds, "query_id", "qv", nProbe))
     // the probed cell set is bounded by nCells (and usually smaller)
     val probedCells = probes.select(col("cell")).distinct()
       .collect().map(_.getLong(0)).toSeq
@@ -778,59 +543,9 @@ object Similarity {
       .select(col("query_id"), col("neighbor_id"), col("cosine"), col("rnk"))
   }
 
-  /** Build the persistent PQ index under `indexDir`:
-    *
-    *  - `codebook` (cell, s0..s{m−1}): [[pqTopK]]'s seeded per-subspace
-    *    centroid subvectors (deterministic);
-    *  - `codes` (vec_id, c0..c{m−1}): every corpus vector's m
-    *    sub-quantizer codes — the 4-byte-per-subspace sketch ADC scans
-    *    instead of the float corpus (the scan-bandwidth win: dim·4
-    *    bytes → m·8 here, 64× at dim=64/m=4 before compression);
-    *  - `vectors` (vec_id, embedding): the raw vectors, range-clustered
-    *    by vec_id ([[graft.sources.TxLog.commitClustered]]) so the
-    *    k·oversample rerank candidates manifest-prune to point reads.
-    *
-    * Same frozen-codebook append contract as [[buildIvfIndex]].
-    */
-  def buildPqIndex(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, emb: DataFrame, dim: Int = 64, m: Int = 4,
-      nCells: Int = 16, batches: Int = 16): Unit = {
-    import graft.sources.TxLog
-    require(dim % m == 0, s"dim $dim not divisible into $m subspaces")
-    val f = new org.apache.hadoop.fs.Path(indexDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    f.delete(new org.apache.hadoop.fs.Path(indexDir), true)
-    val subDim = dim / m
-    def sub(c: Column, i: Int): Column = slice(c, i * subDim + 1, subDim)
-    val seeds = emb.filter(col("vec_id") < nCells)
-      .select(col("vec_id").as("cell") +:
-        (0 until m).map(i => sub(col("embedding"), i).as(s"s$i")): _*)
-    TxLog.commit(spark, s"$indexDir/codebook", seeds)
-    TxLog.commitClustered(spark, s"$indexDir/codes",
-      encodePq(emb, seeds, m, subDim), Seq("vec_id"), batches)
-    TxLog.commitClustered(spark, s"$indexDir/vectors",
-      emb.select(col("vec_id"), col("embedding")), Seq("vec_id"), batches)
-  }
-
-  /** Append to a PQ index: encode the delta against the FROZEN
-    * codebook, append codes + vectors as new clustered batches.
-    */
-  def appendPqIndex(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, newEmb: DataFrame, batches: Int = 4): Unit = {
-    import graft.sources.TxLog
-    val seeds = TxLog.read(spark, s"$indexDir/codebook")
-    val m = seeds.columns.count(_.startsWith("s"))
-    val subDim = seeds.select(size(col("s0"))).head().getInt(0)
-    TxLog.commitClustered(spark, s"$indexDir/codes",
-      encodePq(newEmb, seeds, m, subDim), Seq("vec_id"), batches,
-      append = true)
-    TxLog.commitClustered(spark, s"$indexDir/vectors",
-      newEmb.select(col("vec_id"), col("embedding")), Seq("vec_id"),
-      batches, append = true)
-  }
-
   /** Per-subspace argmin encoding against a broadcast codebook —
-    * [[pqTopK]]'s encode step, shared by build/append/query.
+    * [[pqTopK]]'s encode step, shared by the recompute and indexed
+    * paths.
     */
   private def encodePq(emb: DataFrame, seeds: DataFrame, m: Int,
       subDim: Int): DataFrame = {
@@ -846,72 +561,12 @@ object Similarity {
       .select(col("vec_id") +: (0 until m).map(i => col(s"m$i.c").as(s"c$i")): _*)
   }
 
-  /** [[pqTopK]] answered from a prebuilt [[buildPqIndex]]: queries
-    * alone are encoded; ADC runs over the committed code sketch (never
-    * the float corpus); only the k·oversample winners' raw vectors are
-    * read back — manifest-pruned point reads on the vec_id-clustered
-    * `vectors` table. Bit-identical to [[pqTopK]] (same codebook, same
-    * fixed-order ADC sum, same tie-breaks) — SimilaritySpec pins it.
-    */
-  def pqTopKIndexed(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, queries: DataFrame, k: Int,
-      oversample: Int = 4): DataFrame = {
-    import graft.sources.TxLog
-    val seeds = TxLog.read(spark, s"$indexDir/codebook")
-    val m = seeds.columns.count(_.startsWith("s"))
-    val subDim = seeds.select(size(col("s0"))).head().getInt(0)
-    def sub(c: Column, i: Int): Column = slice(c, i * subDim + 1, subDim)
-    val qsubs = queries.select(col("vec_id").as("query_id") +:
-      (0 until m).map(i => sub(col("embedding"), i).as(s"q$i")): _*)
-    graft.plans.TxStatsRule.register(s"$indexDir/codes")
-    var adc = TxLog.read(spark, s"$indexDir/codes").crossJoin(broadcast(qsubs))
-    (0 until m).foreach { i =>
-      adc = adc.join(
-        broadcast(seeds.select(col("cell").as(s"cell$i"), col(s"s$i"))),
-        col(s"c$i") === col(s"cell$i"))
-    }
-    val adcDist = (0 until m).map(i => seedD2(col(s"q$i"), col(s"s$i")))
-      .reduceLeft(_ + _)
-    val byAdc = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc"), col("vec_id"))
-    val candidates = adc
-      .withColumn("adc", adcDist)
-      .filter(col("query_id") =!= col("vec_id"))
-      .withColumn("r", row_number().over(byAdc))
-      .filter(col("r") <= k * oversample)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"))
-      // ≤ |queries|·k·oversample rows; pinned because the id collect
-      // and the rerank join both consume it (re-deriving re-runs ADC)
-      .transform(Pins.pin(_, "ann_candidates"))
-    // bounded candidate ids → manifest-pruned point reads of the raw
-    // vectors (the only corpus-layout table the query touches)
-    val candIds = candidates.select(col("neighbor_id")).distinct()
-      .collect().map(_.getLong(0)).toSeq
-    // no candidates (empty queries, or every ADC hit was a self-match):
-    // degrade like pqTopK — empty result, no readWhereIn probe
-    if (candIds.isEmpty)
-      return emptyAnn(spark)
-    val cv = TxLog.readWhereIn(spark, s"$indexDir/vectors", "vec_id", candIds)
-      .select(col("vec_id").as("neighbor_id"), col("embedding").as("cv"))
-    val qv = queries.select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-    val byCos = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    candidates
-      .join(cv, Seq("neighbor_id"))
-      .join(broadcast(qv), Seq("query_id"))
-      .withColumn("cosine",
-        cosine(col("qv"), col("cv"), vecNorm(col("qv")), vecNorm(col("cv"))))
-      .withColumn("rnk", row_number().over(byCos).cast("long"))
-      .filter(col("rnk") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("cosine"), col("rnk"))
-  }
-
   // ------------------------------------------------------------------
   // IVF-PQ — the coarse-quantizer × product-code COMPOSITION (Jégou et
   // al. 2011 §V "IVFADC"; the FAISS IndexIVFPQ default shape): IVF
-  // confines the ADC scan to the probed cells' inverted lists (the
-  // [[pqTopKIndexed]] ADC reads EVERY code — sub-linear only in bytes
-  // per vector, not in vectors), and PQ shrinks what that confined
+  // confines the ADC scan to the probed cells' inverted lists (plain
+  // [[pqTopK]] ADC reads EVERY code — sub-linear only in bytes per
+  // vector, not in vectors), and PQ shrinks what that confined
   // scan reads per vector. Codes quantize the RAW vectors, not
   // residuals (FAISS's `by_residual=false` mode): residual encoding
   // materializes elementwise float differences whose arrays the SQL
@@ -1039,8 +694,8 @@ object Similarity {
 
   /** Build the persistent IVF-PQ index under `indexDir`:
     *
-    *  - `centroids` (cell, sv): the frozen coarse quantizer;
-    *  - `codebook` (cell, s0..s{m−1}): the frozen per-subspace PQ
+    *  - `centroids` (cell, sv): the coarse quantizer;
+    *  - `codebook` (cell, s0..s{m−1}): the per-subspace PQ
     *    codebook ([[pqCodebookSeeds]]);
     *  - `cellcodes` (vec_id, c0..c{m−1}, cell): every corpus vector's
     *    codes IN its coarse cell's inverted list, committed one batch
@@ -1049,11 +704,6 @@ object Similarity {
     *    row is (id + m codes), the PQ sketch, never the float payload;
     *  - `vectors` (vec_id, embedding) range-clustered by id for the
     *    rerank's manifest-pruned point reads.
-    *
-    * Same frozen-quantizer append contract as [[buildIvfIndex]] /
-    * [[buildPqIndex]]: appends encode deltas against the committed
-    * centroids AND codebook, so old lists never rewrite; re-train by
-    * rebuilding when measured drift warrants it.
     */
   def buildIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, emb: DataFrame, dim: Int = 64, m: Int = 4,
@@ -1069,38 +719,12 @@ object Similarity {
     val cb = pqCodebookSeeds(emb, nCells, m, subDim)
     TxLog.commit(spark, s"$indexDir/centroids", coarse)
     TxLog.commit(spark, s"$indexDir/codebook", cb)
-    TxLog.commitPartitioned(spark, s"$indexDir/cellcodes",
-      ivfPqEncode(emb, coarse, cb, m, subDim), "cell")
-    TxLog.commitClustered(spark, s"$indexDir/vectors",
-      emb.select(col("vec_id"), col("embedding")), Seq("vec_id"), batches)
-  }
-
-  /** Assign + encode against FROZEN quantizers — build/append share it
-    * so maintained indexes stay bit-consistent with fresh builds.
-    */
-  private def ivfPqEncode(emb: DataFrame, coarse: DataFrame, cb: DataFrame,
-      m: Int, subDim: Int): DataFrame =
-    encodePq(emb, cb, m, subDim)
+    val codes = encodePq(emb, cb, m, subDim)
       .join(seededAssign(emb, coarse, "vec_id", "cv", 1)
         .select(col("vec_id"), col("cell")), Seq("vec_id"))
-
-  /** Incremental IVF-PQ maintenance: encode `newEmb` (disjoint ids)
-    * against the frozen centroids + codebook, append the delta's
-    * per-cell code batches and clustered vectors — O(delta) write, old
-    * lists carry verbatim.
-    */
-  def appendIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, newEmb: DataFrame, batches: Int = 4): Unit = {
-    import graft.sources.TxLog
-    val coarse = TxLog.read(spark, s"$indexDir/centroids")
-    val cb = TxLog.read(spark, s"$indexDir/codebook")
-    val m = cb.columns.count(_.startsWith("s"))
-    val subDim = cb.select(size(col("s0"))).head().getInt(0)
-    TxLog.commitPartitioned(spark, s"$indexDir/cellcodes",
-      ivfPqEncode(newEmb, coarse, cb, m, subDim), "cell", append = true)
+    TxLog.commitPartitioned(spark, s"$indexDir/cellcodes", codes, "cell")
     TxLog.commitClustered(spark, s"$indexDir/vectors",
-      newEmb.select(col("vec_id"), col("embedding")), Seq("vec_id"),
-      batches, append = true)
+      emb.select(col("vec_id"), col("embedding")), Seq("vec_id"), batches)
   }
 
   /** [[ivfPqTopK]] answered from a prebuilt [[buildIvfPqIndex]]:
@@ -1111,9 +735,8 @@ object Similarity {
     * k·oversample winners' raw vectors are point-read back. Same
     * quantizers, same fixed-order arithmetic, same tie-breaks ⇒
     * bit-identical to the recompute path (q227 hash-pins it against
-    * q226's oracle SQL). `asOf` time travel: both quantizers freeze at
-    * build (v1 forever), so one version names the pre-append
-    * cellcodes/vectors pair — IndexSpec pins it.
+    * q226's oracle SQL). `asOf` names one version of the
+    * cellcodes/vectors pair.
     */
   def ivfPqTopKIndexed(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, queries: DataFrame, k: Int, nProbe: Int = 4,
@@ -1126,8 +749,7 @@ object Similarity {
     def sub(c: Column, i: Int): Column = slice(c, i * subDim + 1, subDim)
     // query-bounded by contract; pinned because the probed-cell collect
     // and the ADC join both consume it
-    val probes = Pins.pin(
-      seededAssign(queries, coarse, "query_id", "qv", nProbe), "ivfpq_probes")
+    val probes = Pins.pin(seededAssign(queries, coarse, "query_id", "qv", nProbe))
     val probedCells = probes.select(col("cell")).distinct()
       .collect().map(_.getLong(0)).toSeq
     if (probedCells.isEmpty)
@@ -1140,8 +762,8 @@ object Similarity {
       (0 until m).map(i => sub(col("embedding"), i).as(s"q$i")): _*)
     // ≤ |queries|·k·oversample rows; pinned because the id collect and
     // the rerank join both consume it (re-deriving re-runs the ADC)
-    val candidates = Pins.pin(ivfPqCandidates(codes, cb, probes, qsubs, k, m,
-      oversample), "ivfpq_candidates")
+    val candidates = Pins.pin(
+      ivfPqCandidates(codes, cb, probes, qsubs, k, m, oversample))
     val candIds = candidates.select(col("neighbor_id")).distinct()
       .collect().map(_.getLong(0)).toSeq
     if (candIds.isEmpty)

@@ -38,25 +38,4 @@ object Skew {
         sum(col("_n")).as("n_rows"),
         sums.map(c => sum(col(s"_s_$c")).as(s"sum_$c")): _*)
   }
-
-  /** Salted equi-join for the case AQE's skew split cannot fix: a
-    * sort-merge/hash join where ONE fact key owns so many rows that a
-    * single task owns the key (AQE splits oversized *partitions*, but a
-    * single giant key stays one task's problem when the dim side cannot
-    * broadcast). The fact side gets a deterministic salt in [0, salts);
-    * the dim side is replicated `salts`× via explode; the join runs on
-    * (key, salt) so the hot key spreads over `salts` tasks. Output
-    * equals the plain inner equi-join, row for row.
-    */
-  def saltedJoin(
-      fact: DataFrame,
-      dim: DataFrame,
-      key: String,
-      salts: Int): DataFrame = {
-    val saltedFact = fact.withColumn("_salt",
-      pmod(spark_partition_id() + monotonically_increasing_id(), lit(salts)))
-    val replicatedDim = dim.withColumn("_salt",
-      explode(sequence(lit(0), lit(salts - 1)).cast("array<long>")))
-    saltedFact.join(replicatedDim, Seq(key, "_salt")).drop("_salt")
-  }
 }

@@ -50,13 +50,11 @@ object Stats {
     // the full pass-1 scan+aggregate. Measured on the r12 baseline plan:
     // 18 parquet scans of the input where the 3-pass algorithm needs 3.
     // Pin the tiny frame once (same rationale as the bm25Pruned pins).
-    // Pins.pin = localCheckpoint locally, reliable parquet round-trip
-    // when the session sets a checkpoint dir (cluster operability —
-    // executor loss degrades to recompute-from-disk, round-12 verdict
-    // ask #5).
+    // Pins.pin = localCheckpoint locally, reliable checkpoint when the
+    // context has a checkpoint dir (executor loss then degrades to
+    // recompute-from-disk).
     val stats = Pins.pin(base.groupBy($"grp")
-      .agg(count(lit(1)).as("n"), min($"v").as("lo"), max($"v").as("hi")),
-      "stats_quantile_stats")
+      .agg(count(lit(1)).as("n"), min($"v").as("lo"), max($"v").as("hi")))
 
     val qdf = qs.toDF("q")
 
@@ -85,8 +83,7 @@ object Stats {
         .withColumn("rk", ceil($"q" * $"n").cast("long"))
         .filter($"cum_lo" < $"rk" && $"rk" <= $"cum_hi")
         .select($"grp".as("t_grp"), $"q", $"bin".as("t_bin"),
-          ($"rk" - $"cum_lo").as("rk_in_bin")),
-      "stats_quantile_targets")
+          ($"rk" - $"cum_lo").as("rk_in_bin")))
 
     val candidateBins = targets
       .select($"t_grp".as("grp"), $"t_bin".as("bin")).distinct()

@@ -140,17 +140,6 @@ object TextAnalysis {
   def fingerprint(text: Column): Column =
     md5(lower(trim(regexp_replace(text, " +", " "))))
 
-  /** 64-bit rolling polynomial content hash (order-sensitive, unlike the
-    * md5 of the token multiset) — used for shift-tolerant chunk
-    * fingerprinting; not SQL-oracle-checkable, covered by unit tests.
-    */
-  def rollingHash(text: String): Long = {
-    var h = 1125899906842597L
-    var i = 0
-    while (i < text.length) { h = 31 * h + text.charAt(i); i += 1 }
-    h
-  }
-
   /** Content-defined chunking (CDC): cut after token `i` iff the hash of
     * the `window`-token span ending at `i` is ≡ 0 mod `divisor` — so
     * chunk boundaries are a function of LOCAL content, and an insertion

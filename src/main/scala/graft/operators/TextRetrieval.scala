@@ -131,7 +131,7 @@ object TextRetrieval {
     // Corpus-scaled tf is deliberately NOT pinned (r12 measured: eager
     // tf pins re-ran q210 at 1.32× the baseline min — a corpus-payload
     // checkpoint costs more than the pass it saves).
-    val dlP = Pins.pin(st.dl, "bm25_dl",
+    val dlP = Pins.pin(st.dl,
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
     val tot = dlP.agg(sum(col("dl")).as("t_total"), count(lit(1)).as("n_docs"))
     // qTerms feeds TWO broadcast builds (the qToks tf-filter and the
@@ -210,12 +210,12 @@ object TextRetrieval {
     // one corpus-scaled frame; pinned eagerly (serialized) because the
     // term stats, the seed pass and the scoring pass all consume it,
     // and re-deriving re-runs the corpus tokenization+tf shuffle
-    val ptf = Pins.pin(st.tf.join(broadcast(qToks), "tok"), "bm25_ptf",
+    val ptf = Pins.pin(st.tf.join(broadcast(qToks), "tok"),
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
     // dl is consumed twice (the global extremes and the scoring join):
     // pin the narrow (doc, dl) longs too, or each consumer re-runs the
     // corpus tokenization+tf shuffle — measured as the dominant cost
-    val dlP = Pins.pin(st.dl, "bm25_dl",
+    val dlP = Pins.pin(st.dl,
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
     // one corpus agg row: totals + dl extremes together
     val glob = dlP.agg(sum(col("dl")).as("t_total"),
@@ -285,7 +285,7 @@ object TextRetrieval {
     // is pinned and MEASURED so the scoring semi-joins can broadcast
     // when provably safe and fall back to sort-merge when not.
     val cand = Pins.pin(ptf.join(broadcast(ess), "tok")
-      .select(col("query_id"), col("doc_id")).distinct(), "bm25_cand")
+      .select(col("query_id"), col("doc_id")).distinct())
     val thr = org.apache.spark.sql.internal.SQLConf.get.autoBroadcastJoinThreshold
     val candN = cand.count()
     val candDocs = cand.select(col("doc_id")).distinct()
@@ -370,7 +370,7 @@ object TextRetrieval {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     f.delete(new org.apache.hadoop.fs.Path(indexDir), true)
     val st = corpusStats(docs)
-    val tfP = Pins.pin(st.tf, "bm25_build_tf",
+    val tfP = Pins.pin(st.tf,
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
     TxLog.commitClustered(spark, postingsDir(indexDir), tfP,
       Seq("tok", "doc_id"), batches)
@@ -411,7 +411,7 @@ object TextRetrieval {
       indexDir: String, newDocs: DataFrame, batches: Int = 8): Unit = {
     import graft.sources.TxLog
     val st = corpusStats(newDocs)
-    val tfP = Pins.pin(st.tf, "bm25_append_tf",
+    val tfP = Pins.pin(st.tf,
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
     if (tfP.isEmpty) { tfP.unpersist(); return }
     TxLog.commitClustered(spark, postingsDir(indexDir), tfP,
@@ -636,8 +636,8 @@ object TextRetrieval {
   def removeFromIndex(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, docIds: DataFrame): Unit = {
     import graft.sources.TxLog
-    val ids = Pins.pin(docIds.select(col("doc_id")).distinct(),
-      "bm25_remove_ids") // consumed by two merges; bounded by contract
+    // consumed by two merges; bounded by contract
+    val ids = Pins.pin(docIds.select(col("doc_id")).distinct())
     // an empty delete set must be a FULL no-op: mergeVectored
     // early-returns without committing on an empty source, so letting
     // df/totals recommit below would break the four-table version
@@ -687,18 +687,6 @@ object TextRetrieval {
       TxLog.read(spark, totalsDir(indexDir)))
   }
 
-  /** Token-range overlap fraction of a clustered index table exceeds
-    * the policy threshold? The `clusterHealth` pair-overlap count IS
-    * the probe amplification appends cause (every append epoch's
-    * batches span the full token range, so a one-term probe reads
-    * 1 + n_appends batches). Delegates to the table-level policy
-    * predicate so the two never diverge.
-    */
-  private def indexFragmented(spark: org.apache.spark.sql.SparkSession,
-      dir: String, maxOverlapFraction: Double): Boolean =
-    graft.sources.TxLog.overlapDegraded(spark, dir, Seq("tok"),
-      maxOverlapFraction)
-
   /** Measure-then-act index maintenance (round-9 verdict #7 — the
     * `TxLog.autoCluster`/`autoPurge` discipline for the index
     * families): fire [[compactIndex]]'s clustered rewrite only when
@@ -706,12 +694,17 @@ object TextRetrieval {
     * (which also materializes any accumulated merge-on-read delete
     * tombstones); below it the call is a metadata-only no-op, so a
     * scheduler can probe after every append burst for the cost of one
-    * manifest read. Returns true when it compacted.
+    * manifest read. The fragmentation measure is the table-level
+    * token-range overlap ([[graft.sources.TxLog.overlapDegraded]]):
+    * every append epoch's batches span the full token range, so a
+    * one-term probe reads 1 + n_appends batches. Returns true when it
+    * compacted.
     */
   def autoCompactIndex(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, maxOverlapFraction: Double = 0.5,
       batches: Int = 32): Boolean =
-    indexFragmented(spark, postingsDir(indexDir), maxOverlapFraction) && {
+    graft.sources.TxLog.overlapDegraded(spark, postingsDir(indexDir),
+        Seq("tok"), maxOverlapFraction) && {
       compactIndex(spark, indexDir, batches); true
     }
 
@@ -749,7 +742,6 @@ object TextRetrieval {
     // the three consumers' inputs byte-identical
     val ptf = Pins.pin(
       TxLog.readWhereIn(spark, postingsDir(indexDir), "tok", toks),
-      "bm25_idx_ptf",
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
     val dlP = TxLog.read(spark, dlDir(indexDir))
     val glob = TxLog.read(spark, totalsDir(indexDir))
@@ -983,48 +975,6 @@ object TextRetrieval {
     val pos = TxLog.readWhereIn(spark, posDir(indexDir), "tok", toks, asOf)
     proximityCore(pos, queries, window, k)
   }
-
-  /** Document deletes from the positional index: tombstone the doomed
-    * docs' position rows merge-on-read ([[graft.sources.TxLog
-    * .mergeVectored]] — every committed batch carries forward verbatim,
-    * one vector sidecar per touched batch). Unlike the BM25 family
-    * there is NO derived state to reconcile: positions are per-doc
-    * facts, so the single-table tombstone IS the whole delete. An
-    * empty delete set is a full no-op (version unchanged).
-    */
-  def removeFromPositionalIndex(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, docIds: DataFrame): Unit = {
-    import graft.sources.TxLog
-    val ids = docIds.select(col("doc_id")).distinct()
-    if (ids.isEmpty) return
-    TxLog.mergeVectored(spark, posDir(indexDir),
-      ids.withColumn("p", lit(0)).withColumn("tok", lit("")),
-      "doc_id", whenMatched = "delete", insertNotMatched = false)
-  }
-
-  /** Re-tighten the positional layout after appends (each
-    * [[appendToPositionalIndex]] adds delta batches spanning the full
-    * token range, so a one-term probe reads 1 + n_appends batches) and
-    * materialize accumulated tombstones away — [[compactIndex]]'s
-    * contract for the single-table family. History stays queryable.
-    */
-  def compactPositionalIndex(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, batches: Int = 32): Unit = {
-    import graft.sources.TxLog
-    TxLog.commitClustered(spark, posDir(indexDir),
-      TxLog.read(spark, posDir(indexDir)), Seq("tok", "doc_id"), batches)
-  }
-
-  /** [[autoCompactIndex]] for the positional family: measured
-    * fragmentation of the single positions table, compaction only past
-    * the threshold.
-    */
-  def autoCompactPositionalIndex(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, maxOverlapFraction: Double = 0.5,
-      batches: Int = 32): Boolean =
-    indexFragmented(spark, posDir(indexDir), maxOverlapFraction) && {
-      compactPositionalIndex(spark, indexDir, batches); true
-    }
 
   /** [[phraseTopK]] answered from a prebuilt [[buildPositionalIndex]]
     * — zero corpus-scaled work at query time: the phrase's vocabulary

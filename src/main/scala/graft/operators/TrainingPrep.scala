@@ -65,29 +65,6 @@ object TrainingPrep {
     docs.join(broadcast(flagged), Seq("doc_id"), "left_anti")
   }
 
-  /** Streaming-composable decontamination, minHits=1 semantics: the
-    * benchmark gram set is collected and broadcast (eval suites are
-    * MB-scale — the same fits-one-node envelope as the routing CSR), and
-    * each document is a stateless per-row membership filter. This makes
-    * the op legal in a Structured Streaming plan, where
-    * [[decontaminate]]'s aggregate-then-anti-join shape is not (the
-    * flagged set would be a stream-stream anti-join). TrainingPrepSpec
-    * holds it equal to `decontaminate(_, _, n, 1)` on batch input;
-    * TextStreamSpec runs it on a stream.
-    */
-  def decontaminateStreamable(docs: DataFrame, benchmark: DataFrame,
-      n: Int): DataFrame = {
-    val spark = docs.sparkSession
-    val bench = grams(benchmark, n).select(col("gram")).distinct()
-      .collect().map(_.getString(0)).toSet
-    val bc = spark.sparkContext.broadcast(bench)
-    val contaminated = udf { text: String =>
-      val w = text.split(' ')
-      (0 to w.length - n).exists(i => bc.value.contains(w.slice(i, i + n).mkString(" ")))
-    }
-    docs.filter(!contaminated(col("text")))
-  }
-
   /** DSIR-style importance weighting (Xie et al. 2023, "Data Selection
     * for Language Models via Importance Resampling"): score every raw
     * document by how target-like its token distribution is. The paper's
@@ -252,9 +229,9 @@ object TrainingPrep {
     // which the checkpoint now guarantees by construction. The pinned
     // rows are the caller's narrow projection ((doc_id, ntok) longs in
     // packSequences), never the text payload.
-    // Pins.pin: localCheckpoint locally, reliable under the session
-    // checkpoint-dir gate (round-12 verdict ask #5).
-    val parts = Pins.pin(prefixSumParts(df, orderCol), "prefix_sum_parts",
+    // Pins.pin: localCheckpoint locally, reliable once the context has
+    // a checkpoint dir.
+    val parts = Pins.pin(prefixSumParts(df, orderCol),
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
     val withLocal = parts.withColumn("__local",
       sum(valueCol).over(Window.partitionBy(col("__pid")).orderBy(orderCol)))
@@ -356,17 +333,4 @@ object TrainingPrep {
       .withColumn("shard_pos", row_number().over(w).cast("long"))
       .drop("__h")
   }
-
-  /** Land a [[shardAssign]] result as ONE parquet file per shard
-    * directory (`shard=K/part-…`), rows inside each file in `shard_pos`
-    * order — the layout a sequential dataloader consumes shard-by-shard.
-    * Repartitioning BY the shard key first means each hive split sees
-    * its whole shard in one task, so the file count equals the shard
-    * count, not tasks × shards.
-    */
-  def writeShards(assigned: DataFrame, outDir: String): Unit =
-    assigned
-      .repartition(col("shard"))
-      .sortWithinPartitions(col("shard"), col("shard_pos"))
-      .write.mode("overwrite").partitionBy("shard").parquet(outDir)
 }

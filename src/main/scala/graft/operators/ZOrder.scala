@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Z-order (Morton) clustering — multi-dimensional data skipping
@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
   * row groups), one in-partition sort, map-only z computation from
   * integer bit ops (whole-stage codegen; no UDF). The z column itself
   * is dropped before the write — it is a physical layout choice, not
-  * schema.
+  * schema. [[graft.sources.TxLog.compactClustered]] is the writer.
   */
 object ZOrder {
 
@@ -43,27 +43,5 @@ object ZOrder {
           lit(1L << (i * k + j))
       }
     }.reduce(_ + _)
-  }
-
-  /** Write `df` z-clustered on `zCols`. `rowGroupBytes` sizes the
-    * pruning granule (smaller groups = tighter boxes = better skip,
-    * more footer entries); `partitions` the file count.
-    */
-  def writeClustered(
-      df: DataFrame,
-      dir: String,
-      zCols: Seq[String],
-      bits: Int = 16,
-      partitions: Int = 0,
-      rowGroupBytes: Int = 1 << 20): Unit = {
-    val n = if (partitions > 0) partitions
-      else df.sparkSession.sparkContext.defaultParallelism
-    df.withColumn("__z", zValue(zCols.map(col), bits))
-      .repartitionByRange(n, col("__z"))
-      .sortWithinPartitions("__z")
-      .drop("__z")
-      .write.mode("overwrite")
-      .option("parquet.block.size", rowGroupBytes.toString)
-      .parquet(dir)
   }
 }

@@ -348,8 +348,7 @@ object MvCatalog {
     // batches, doubling the I/O the fold exists to save. The view is
     // KB-sized and the delta touched-groups-sized, so the checkpoint is
     // small by construction.
-    val joined = graft.operators.Pins.pin(
-      stored.join(dside, cond, "full_outer"), "mv_fold_join")
+    val joined = graft.operators.Pins.pin(stored.join(dside, cond, "full_outer"))
     // rebuild triggers, per measure: a NON-NULL deleted value against
     //  - a stored extreme it may have been (del_min <= min / del_max >=
     //    max — conservative: a surviving duplicate still trips), or

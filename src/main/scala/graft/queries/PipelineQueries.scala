@@ -940,8 +940,7 @@ object PipelineQueries extends QueryPack {
     // exact rerank. Distances reduce to three float dots
     // (‖a−b‖² = ‖a‖² + ‖b‖² − 2a·b), each bit-identical to DuckDB's
     // list_dot_product, so cell assignment / probing / rerank all
-    // hash-verify. The Lloyd-iterated variant (ivfTopK) stays
-    // recall-unit-tested.
+    // hash-verify.
     QueryDef(
       "q53_ann_ivf",
       (s, dir) => {

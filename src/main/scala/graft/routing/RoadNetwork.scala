@@ -641,10 +641,10 @@ object RoadNetwork {
     */
   def sssp(edgeDf: DataFrame, sources: DataFrame, maxIters: Int = 50): DataFrame = {
     val e = graft.operators.Pins.pin(
-      edgeDf.select(col("src").as("node"), col("dst"), col("sec")), "sssp_edges")
+      edgeDf.select(col("src").as("node"), col("dst"), col("sec")))
     var dist = graft.operators.Pins.pin(
       sources.select(col("id").as("source"), col("id").as("node"),
-        lit(0.0).as("dist_sec")), "sssp_dist0")
+        lit(0.0).as("dist_sec")))
     var frontier = dist
     var i = 0
     var active = frontier.count()
@@ -657,14 +657,13 @@ object RoadNetwork {
       val joined = cand.join(dist, Seq("source", "node"), "left")
       val improved = graft.operators.Pins.pin(joined
         .filter(col("dist_sec").isNull || col("cand_sec") < col("dist_sec"))
-        .select(col("source"), col("node"), col("cand_sec").as("dist_sec")),
-        "sssp_improved")
+        .select(col("source"), col("node"), col("cand_sec").as("dist_sec")))
       active = improved.count()
       if (active > 0) {
         // min-merge: one narrow shuffle, map-side partial agg
         dist = graft.operators.Pins.pin(dist.unionByName(improved)
           .groupBy("source", "node")
-          .agg(min("dist_sec").as("dist_sec")), "sssp_dist")
+          .agg(min("dist_sec").as("dist_sec")))
         frontier = improved
       }
       i += 1
@@ -1145,7 +1144,7 @@ object RoadNetwork {
     val cols = Seq("src", "dst", "src_lon", "src_lat", "dst_lon", "dst_lat",
       "highway", "meters", "sec")
     val e0 = graft.operators.Pins.pin(edgeDf.select(cols.map(col): _*)
-      .filter(col("src") =!= col("dst")), "contract_e0")
+      .filter(col("src") =!= col("dst")))
     // contractible = exactly two distinct undirected neighbors, minus keeps
     val deg2 = e0.select(col("src").as("id"), col("dst").as("nbr"))
       .union(e0.select(col("dst").as("id"), col("src").as("nbr")))
@@ -1154,8 +1153,7 @@ object RoadNetwork {
       .filter(col("deg") === 2)
       .select(col("id"))
     val contractible = graft.operators.Pins.pin(keep.fold(deg2)(k =>
-        deg2.join(k.select(col(k.columns.head).as("id")), Seq("id"), "left_anti")),
-      "contract_nodes")
+        deg2.join(k.select(col(k.columns.head).as("id")), Seq("id"), "left_anti")))
     // a legitimate endpoint→endpoint span visits each contractible node
     // at most once → hops ≤ nContractible + 1; anything longer wrapped a
     // pure ring and is dead weight from then on
@@ -1186,7 +1184,7 @@ object RoadNetwork {
             (col("__hops") + col("c_h")).as("__hops"))
           .filter(col("__hops") <= maxHops)
         spans = graft.operators.Pins.pin(
-          stopped.unionByName(extended), "contract_spans")
+          stopped.unionByName(extended))
       }
       round += 1
     }

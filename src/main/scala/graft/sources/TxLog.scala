@@ -2428,22 +2428,6 @@ object TxLog {
       from.filterNot(toSet).map(d => s"$tableDir/$d"))
   }
 
-  /** Streaming-source hook: batch dirs present in BOTH versions whose
-    * manifest LINE changed between them — today that means a deletion
-    * vector appeared or grew ([[deleteVectored]]): the dir set is
-    * unchanged but the data a read returns is not, which an append-only
-    * stream consumer must treat like a rewrite. Pure metadata.
-    */
-  /** Absolute batch dirs of version `v` whose lines carry a deletion
-    * vector (streaming-source hook). Pure metadata.
-    */
-  private[graft] def dvDirs(spark: SparkSession, tableDir: String,
-      v: Long): Set[String] =
-    readManifest(spark, tableDir, v).flatMap { l =>
-      val (d, st) = parseLine(l)
-      dvOf(st).map(_ => s"$tableDir/$d")
-    }.toSet
-
   /** Streaming-source hook: table-relative dv paths of version `v`'s
     * lines whose batch dir is in `dirs` (absolute). Pure metadata.
     */
@@ -2465,6 +2449,12 @@ object TxLog {
       .exists(l => dvOf(parseLine(l)._2).isDefined)
   }
 
+  /** Streaming-source hook: batch dirs present in BOTH versions whose
+    * manifest LINE changed between them — today that means a deletion
+    * vector appeared or grew ([[deleteVectored]]): the dir set is
+    * unchanged but the data a read returns is not, which an append-only
+    * stream consumer must treat like a rewrite. Pure metadata.
+    */
   private[graft] def versionChangedShared(spark: SparkSession,
       tableDir: String, fromV: Long, toV: Long): Seq[String] = {
     if (fromV <= 0) return Seq.empty

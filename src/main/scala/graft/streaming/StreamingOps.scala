@@ -39,71 +39,6 @@ object StreamingOps {
     spark.table(queryName)
   }
 
-  /** Streaming per-hour distinct-user estimate via the KMV sketch
-    * (plans/KmvSketch.scala) — proves the bounded-state
-    * TypedImperativeAggregate composes with Structured Streaming's
-    * partial/merge state protocol: each micro-batch updates k-long
-    * sketch buffers, complete mode re-emits the merged estimate. The
-    * sketch is a deterministic function of the value SET, so the
-    * streaming result equals the batch aggregation bit-for-bit
-    * (TextStreamSpec asserts equality).
-    */
-  def hourlyDistinctUsers(spark: SparkSession, sfDir: String, queryName: String = "graft_stream_kmv"): DataFrame = {
-    import spark.implicits._
-    val schema = T.eventsRawSchema(spark, sfDir)
-    val stream = T.normalizeEventTs(spark.readStream
-      .schema(schema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(sfDir))
-    val agg = stream
-      .groupBy((expr("ts div 3600000000000") * 3600).as("hour_epoch"))
-      .agg(
-        graft.plans.KmvSketchAgg.kmvEstimate($"user_id", 32).as("est_users"),
-        count(lit(1)).as("n"))
-    val q = agg.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(queryName)
-  }
-
-  /** Stream-stream interval join: purchases joined to signups by the same
-    * user within [0, 1h] — the streaming form of the as-of/funnel
-    * attribution (AsOfJoin.backward is the batch form). Both sides are
-    * watermarked so the state store can evict; the join condition's time
-    * bounds are what make eviction safe.
-    */
-  def streamStreamFunnel(spark: SparkSession, sfDir: String, queryName: String = "graft_ss_join"): DataFrame = {
-    import spark.implicits._
-    val schema = T.eventsRawSchema(spark, sfDir)
-    def side(eventType: String, idAs: String, tsAs: String) = T.normalizeEventTs(spark.readStream
-      .schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(sfDir))
-      .filter($"event_type" === eventType)
-      .select(
-        $"user_id".as(s"${idAs}_user"),
-        $"event_id".as(s"${idAs}_event"),
-        timestamp_micros(expr("ts div 1000")).as(tsAs))
-      .withWatermark(tsAs, "2 hours")
-    val purchases = side("purchase", "p", "p_ts")
-    val signups = side("signup", "s", "s_ts")
-    val joined = purchases.join(
-      signups,
-      expr("""p_user = s_user AND s_ts <= p_ts AND s_ts >= p_ts - INTERVAL 1 HOUR"""))
-      .select(
-        $"p_user".as("user_id"), $"p_event".as("purchase_event"),
-        $"s_event".as("signup_event"),
-        unix_timestamp($"p_ts").as("p_epoch"), unix_timestamp($"s_ts").as("s_epoch"))
-    val q = joined.writeStream.outputMode("append")
-      .format("memory").queryName(queryName).start()
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(queryName)
-  }
-
   /** LEFT OUTER stream-stream funnel: every purchase emits — attributed
     * to its in-window signups when they exist, with nulls once the
     * watermark proves no signup can still arrive. This is the streaming
@@ -348,40 +283,6 @@ object StreamingOps {
     TxLog.read(spark, viewDir)
   }
 
-  /** Streaming publish: the stream lands in the SAME layout contract as
-    * batch publishes (string-typed Hive partition keys, zstd, ordered
-    * rows) via foreachBatch — each microbatch appends through an ordered
-    * partitioned write keyed by (event_type, hour). On an unbounded
-    * source the accreting small files are exactly what
-    * [[graft.sources.TableIO.compact]] periodically folds up.
-    */
-  def streamingPublish(spark: SparkSession, sfDir: String, outDir: String): DataFrame = {
-    import spark.implicits._
-    val schema = T.eventsRawSchema(spark, sfDir)
-    val stream = T.normalizeEventTs(spark.readStream
-      .schema(schema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(sfDir))
-      .select(
-        $"event_id", $"user_id", $"value",
-        $"event_type",
-        (expr("ts div 3600000000000") * 3600).cast("string").as("hour"))
-    val q = stream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        batch
-          .repartition($"event_type", $"hour")
-          .sortWithinPartitions($"event_type", $"hour", $"event_id")
-          .write.mode("append")
-          .option("compression", "zstd")
-          .partitionBy("event_type", "hour")
-          .parquet(outDir)
-      }
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    graft.sources.TableIO.readPartitioned(spark, outDir)
-  }
-
   /** Streaming CDC upsert: change batches (full rows + op/seq, the
     * [[graft.operators.Cdc.applyChanges]] contract) arrive as a file
     * stream and maintain a materialized key-bucketed table in
@@ -444,87 +345,5 @@ object StreamingOps {
     try q.processAllAvailable()
     finally q.stop()
     spark.read.parquet(stateDir).drop("__bucket")
-  }
-
-  /** Rolling near-dup dedup over a document stream: every micro-batch
-    * dedups against the ACCUMULATED corpus via
-    * [[graft.operators.Dedup.minhashPairsIncremental]] — candidates from
-    * the batch-vs-store signature join only — then appends its own
-    * signatures (and raw docs, for candidate verification) to the state
-    * directories the next batch reads. State is plain parquet, not a
-    * streaming state store: restart-safe, queryable, and identical to
-    * what a batch backfill would produce. Each near-dup pair surfaces
-    * exactly once — when its later endpoint arrives (TextStreamSpec
-    * holds the union over batches equal to the full batch run).
-    */
-  def streamingIncrementalDedup(spark: SparkSession, inDir: String,
-      stateDir: String): DataFrame = {
-    import spark.implicits._
-    val schema = spark.read.parquet(inDir).schema
-    val sigDir = s"$stateDir/sigs"
-    val corpusDir = s"$stateDir/corpus"
-    val pairsDir = s"$stateDir/pairs"
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    val stream = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(inDir)
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val s2 = batch.sparkSession
-        import s2.implicits._
-        // the batch feeds three consumers (pairs, signatures, corpus
-        // append) — pin it rather than re-pull the source three times
-        val b = batch.localCheckpoint()
-        val oldSigs =
-          if (fs.exists(new org.apache.hadoop.fs.Path(sigDir))) s2.read.parquet(sigDir)
-          else Seq.empty[(Long, Int, Long)].toDF("doc_id", "band", "bucket")
-        val oldDocs =
-          if (fs.exists(new org.apache.hadoop.fs.Path(corpusDir))) s2.read.parquet(corpusDir)
-          else Seq.empty[(Long, String)].toDF("doc_id", "text")
-        // pairs first: their lazy reads must see the PRE-batch state.
-        // Pins ride the state directory (reliable mode): the stream's
-        // narrow frames survive executor churn alongside the signature
-        // store instead of squatting on executor storage batch after batch
-        graft.operators.Dedup.minhashPairsIncremental(b, oldDocs, oldSigs,
-            checkpointDir = Some(s"$stateDir/ckpt"))
-          .write.mode("append").parquet(pairsDir)
-        graft.operators.Dedup.minhashSignatures(b)
-          .write.mode("append").parquet(sigDir)
-        b.select(col("doc_id"), col("text")).write.mode("append").parquet(corpusDir)
-      }
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.read.parquet(pairsDir)
-  }
-
-  /** Watermarked append-mode variant (the production shape): 1-hour
-    * tumbling windows with a 2-hour watermark. Only windows the watermark
-    * has passed are emitted, so the tail window stays in state — callers
-    * compare against the oracle excluding the final window (unit-tested;
-    * not part of the batch-oracle surface).
-    */
-  def hourlyCountsWatermarked(spark: SparkSession, sfDir: String, queryName: String = "graft_stream_wm"): DataFrame = {
-    import spark.implicits._
-    val schema = T.eventsRawSchema(spark, sfDir)
-    val stream = T.normalizeEventTs(spark.readStream
-      .schema(schema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(sfDir))
-    val agg = stream
-      .withColumn("tsc", timestamp_micros(expr("ts div 1000")))
-      .withWatermark("tsc", "2 hours")
-      .groupBy(window($"tsc", "1 hour"), $"event_type")
-      .agg(count(lit(1)).as("n"))
-      .select(unix_timestamp($"window.start").as("hour_epoch"), $"event_type", $"n")
-    val q = agg.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(queryName)
   }
 }

@@ -228,11 +228,6 @@ class DedupSpec extends AnyFunSuite {
     assert(rows(1L) == Some(0.75) && rows(2L) == Some(0.0) && rows(3L).isEmpty)
   }
 
-  test("rolling hash is order-sensitive where token-multiset hashing is not") {
-    assert(TextAnalysis.rollingHash("a b c") != TextAnalysis.rollingHash("c b a"))
-    assert(TextAnalysis.rollingHash("a b c") == TextAnalysis.rollingHash("a b c"))
-  }
-
   test("hot-shingle df cap: shared boilerplate header does not blow up candidates") {
     val s = spark
     import s.implicits._
@@ -288,12 +283,15 @@ class DedupSpec extends AnyFunSuite {
     // reliable-checkpoint mode (cluster shape: pins go to the store's
     // filesystem, lineage-safe under executor loss) — identical output
     val ckpt = "/tmp/graft_incr_ckpt"
-    val reliable = Dedup.minhashPairsIncremental(
-        newDocs, oldDocs, s.read.parquet(store), checkpointDir = Some(ckpt))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(reliable == full)
-    // the pinned frames landed in the store directory
-    assert(new java.io.File(s"$ckpt/_ckpt_candidates").exists())
+    withCheckpointDir(ckpt) {
+      val reliableDf = Dedup.minhashPairsIncremental(
+        newDocs, oldDocs, s.read.parquet(store))
+      val reliable = reliableDf
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+      assert(reliable == full)
+      // the pinned frames landed under the checkpoint dir
+      assert(checkpointFiles(reliableDf).exists(_.contains("graft_incr_ckpt")))
+    }
   }
 
   test("prefixJaccardJoin equals brute force on a planted corpus") {

@@ -121,10 +121,13 @@ class GraphSpec extends AnyFunSuite {
     assert(run(6) == run(7), "6 rounds is not yet the fixed point at k=8")
     // reliable-checkpoint mode (cluster path): identical output, frames on disk
     val ckpt = s"${GraftSession.scratchBase}/graft_kcore_spec"
-    val rel = GraphOps.kCore(e, k = 8, rounds = 6, checkpointDir = Some(ckpt))
-      .collect().map(x => x.getAs[Long]("node") -> x.getAs[Long]("core_deg")).toMap
-    assert(rel == run(6))
-    assert(new java.io.File(s"$ckpt/_kcore_r6").exists())
+    withCheckpointDir(ckpt) {
+      val relDf = GraphOps.kCore(e, k = 8, rounds = 6)
+      val rel = relDf.collect()
+        .map(x => x.getAs[Long]("node") -> x.getAs[Long]("core_deg")).toMap
+      assert(rel == run(6))
+      assert(checkpointFiles(relDf).exists(_.contains("graft_kcore_spec")))
+    }
   }
 
   test("pageRank: mass envelope — every rank in [base, n·scale]") {

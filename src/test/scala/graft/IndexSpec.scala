@@ -271,128 +271,6 @@ class IndexSpec extends AnyFunSuite {
     assert(got == want)
   }
 
-  test("IVF append: frozen centroids, delta-only write, exact answers") {
-    val ix = fresh("ivf_append")
-    val half = emb.count() / 2
-    assert(half > 16, "first half must contain the 16 seed vectors")
-    val oldEmb = emb.filter(col("vec_id") < half)
-    Similarity.buildIvfIndex(spark, ix, oldEmb, nCells = 16)
-    val v1Cells = TxLog.manifest(spark, s"$ix/cells").map(_._1)
-    Similarity.appendIvfIndex(spark, ix, emb.filter(col("vec_id") >= half))
-    val afterCells = TxLog.manifest(spark, s"$ix/cells").map(_._1)
-    assert(afterCells.take(v1Cells.size) == v1Cells,
-      "append must carry old cell batches verbatim")
-    val q = emb.filter(col("vec_id") < 10)
-    val got = asSet(Similarity.ivfTopKIndexed(spark, ix, q, 5, nProbe = 4))
-    // centroids = 16 lowest-id vectors, identical for half and union ⇒
-    // the maintained index must equal the full recompute
-    val want = asSet(Similarity.ivfTopKSeeded(emb, q, 5, 16, 4))
-    assert(got == want)
-    // time travel: the pre-append cell lists answer over the old corpus
-    assert(asSet(Similarity.ivfTopKIndexed(spark, ix, q, 5, 4, asOf = Some(1L))) ==
-      asSet(Similarity.ivfTopKSeeded(oldEmb, q, 5, 16, 4)))
-  }
-
-  test("autoCompactIvfIndex: per-cell amplification measured from the manifest (r10)") {
-    val ix = fresh("ivf_autocompact")
-    val n = emb.count()
-    Similarity.buildIvfIndex(spark, ix, emb.filter(col("vec_id") < n / 2),
-      nCells = 8)
-    assert(!Similarity.autoCompactIvfIndex(spark, ix),
-      "fresh one-batch-per-cell layout must be a no-op")
-    Similarity.appendIvfIndex(spark, ix,
-      emb.filter(col("vec_id") >= n / 2 && col("vec_id") < 3 * n / 4))
-    // one append epoch: busiest cell holds 2 batches — at the default
-    // threshold that is still acceptable
-    assert(!Similarity.autoCompactIvfIndex(spark, ix),
-      "2 batches per cell is within the default policy")
-    Similarity.appendIvfIndex(spark, ix, emb.filter(col("vec_id") >= 3 * n / 4))
-    assert(Similarity.autoCompactIvfIndex(spark, ix),
-      "3 batches per cell must fire the recompaction")
-    // answers unchanged; layout back to one batch per probed cell
-    val q = emb.filter(col("vec_id") < 10)
-    assert(asSet(Similarity.ivfTopKIndexed(spark, ix, q, 5, nProbe = 4)) ==
-      asSet(Similarity.ivfTopKSeeded(emb, q, 5, 8, 4)))
-    assert(!Similarity.autoCompactIvfIndex(spark, ix),
-      "recompacted layout must be a no-op again")
-  }
-
-  test("ivfDriftRatio: in-distribution appends ~1, drifted appends flag retrain (r10)") {
-    val n = emb.count()
-    // in-distribution: the other half of the SAME corpus
-    val ix1 = fresh("ivf_drift_ok")
-    Similarity.buildIvfIndex(spark, ix1, emb.filter(col("vec_id") < n / 2),
-      nCells = 8)
-    assert(Similarity.ivfDriftRatio(spark, ix1).isEmpty,
-      "no appends: drift is undefined, not zero")
-    Similarity.appendIvfIndex(spark, ix1, emb.filter(col("vec_id") >= n / 2))
-    val ok = Similarity.ivfDriftRatio(spark, ix1).get
-    assert(ok > 0.5 && ok < 2.0, s"in-distribution drift ratio was $ok")
-    assert(!Similarity.shouldRetrainIvf(spark, ix1),
-      "in-distribution appends must not flag a retrain")
-    // drifted: the appended stream lives far from every frozen centroid
-    val ix2 = fresh("ivf_drift_bad")
-    Similarity.buildIvfIndex(spark, ix2, emb.filter(col("vec_id") < n / 2),
-      nCells = 8)
-    val shifted = emb.filter(col("vec_id") >= n / 2)
-      .select(col("vec_id"),
-        expr("transform(embedding, x -> CAST(x + 5.0 AS FLOAT))").as("embedding"))
-    Similarity.appendIvfIndex(spark, ix2, shifted)
-    val bad = Similarity.ivfDriftRatio(spark, ix2).get
-    assert(bad > 2.0, s"shifted appends must measure drifted, got $bad")
-    assert(Similarity.shouldRetrainIvf(spark, ix2),
-      "measured drift past the threshold must flag a retrain")
-    // maintenance reclaims the v1 window: drift goes UNMEASURABLE
-    // (None), never a crash — and a re-anchored baseline measures again
-    Similarity.autoCompactIvfIndex(spark, ix2, maxBatchesPerCell = 1)
-    val anchor = TxLog.latestVersion(spark, s"$ix2/cells")
-    TxLog.vacuum(spark, s"$ix2/cells", anchor, force = true)
-    assert(Similarity.ivfDriftRatio(spark, ix2).isEmpty,
-      "reclaimed replay window must read as unmeasurable")
-    val worse = emb.filter(col("vec_id") >= n / 2)
-      .select((col("vec_id") + 100000L).as("vec_id"),
-        expr("transform(embedding, x -> CAST(x + 20.0 AS FLOAT))").as("embedding"))
-    Similarity.appendIvfIndex(spark, ix2, worse)
-    assert(Similarity.ivfDriftRatio(spark, ix2, sinceVersion = anchor)
-      .exists(_ > 2.0), "re-anchored drift must measure the new appends")
-  }
-
-  test("autoCompactIvfPqIndex: same policy over the code lists (r10)") {
-    val ix = fresh("ivfpq_autocompact")
-    val n = emb.count()
-    Similarity.buildIvfPqIndex(spark, ix, emb.filter(col("vec_id") < n / 2),
-      dim = 64, m = 4, nCells = 8, batches = 4)
-    assert(!Similarity.autoCompactIvfPqIndex(spark, ix))
-    Similarity.appendIvfPqIndex(spark, ix,
-      emb.filter(col("vec_id") >= n / 2 && col("vec_id") < 3 * n / 4))
-    Similarity.appendIvfPqIndex(spark, ix, emb.filter(col("vec_id") >= 3 * n / 4))
-    assert(Similarity.autoCompactIvfPqIndex(spark, ix))
-    // LOCKSTEP: the asOf contract names ONE version for the
-    // cellcodes/vectors pair — compaction must bump both
-    assert(TxLog.latestVersion(spark, s"$ix/cellcodes") ==
-      TxLog.latestVersion(spark, s"$ix/vectors"),
-      "compaction must keep the table pair in version lockstep")
-    val q = emb.filter(col("vec_id") < 10)
-    assert(asSet(Similarity.ivfPqTopKIndexed(spark, ix, q, 5)) ==
-      asSet(Similarity.ivfPqTopK(emb, q, 5, nCells = 8)),
-      "recompaction must not change ADC answers")
-    assert(!Similarity.autoCompactIvfPqIndex(spark, ix))
-  }
-
-  // ------------------------------------------------------------------ PQ
-
-  test("indexed PQ ANN answers bit-identically to the recompute (incl. append)") {
-    val ix = fresh("pq")
-    val half = emb.count() / 2
-    Similarity.buildPqIndex(spark, ix, emb.filter(col("vec_id") < half),
-      dim = 64, m = 4, nCells = 16, batches = 4)
-    Similarity.appendPqIndex(spark, ix, emb.filter(col("vec_id") >= half))
-    val q = emb.filter(col("vec_id") < 10)
-    val got = asSet(Similarity.pqTopKIndexed(spark, ix, q, 5))
-    val want = asSet(Similarity.pqTopK(emb, q, 5, dim = 64, m = 4, nCells = 16))
-    assert(got == want)
-  }
-
   // -------------------------------------------------------------- IVF-PQ
 
   test("indexed IVF-PQ ≡ recompute; frozen-quantizer append; time travel") {
@@ -405,21 +283,7 @@ class IndexSpec extends AnyFunSuite {
     // fresh build answers exactly as the recompute over the same corpus
     assert(asSet(Similarity.ivfPqTopKIndexed(spark, ix, q, 5)) ==
       asSet(Similarity.ivfPqTopK(oldEmb, q, 5)))
-    val v1Codes = TxLog.manifest(spark, s"$ix/cellcodes").map(_._1)
-    Similarity.appendIvfPqIndex(spark, ix, emb.filter(col("vec_id") >= half))
-    // delta-only write: every pre-append code batch carries verbatim,
-    // and BOTH quantizer tables stay at v1 (frozen by contract)
-    val afterCodes = TxLog.manifest(spark, s"$ix/cellcodes").map(_._1)
-    assert(afterCodes.take(v1Codes.size) == v1Codes,
-      "append must carry old cell-code batches verbatim")
-    Seq("centroids", "codebook").foreach { t =>
-      assert(TxLog.latestVersion(spark, s"$ix/$t") == 1L, s"$t must stay frozen")
-    }
-    // quantizers = seed blocks [0,32), identical for half and union ⇒
-    // the maintained index must equal the full recompute
-    assert(asSet(Similarity.ivfPqTopKIndexed(spark, ix, q, 5)) ==
-      asSet(Similarity.ivfPqTopK(emb, q, 5)))
-    // frozen quantizers ⇒ one asOf names the pre-append code+vector pair
+    // one committed version: asOf = 1 names the same code+vector pair
     assert(asSet(Similarity.ivfPqTopKIndexed(spark, ix, q, 5, asOf = Some(1L))) ==
       asSet(Similarity.ivfPqTopK(oldEmb, q, 5)))
     // empty queries degrade like the recompute path
@@ -470,36 +334,19 @@ class IndexSpec extends AnyFunSuite {
     TextRetrieval.appendToPositionalIndex(spark, ix,
       docs.filter(col("doc_id") >= 2 * third))
     val ph = phrasesOf(docs)
-    // merge-on-read delete: batch dirs carry verbatim, answers match a
-    // recompute over the survivors
-    val before = TxLog.manifest(spark, s"$ix/postings_pos").map(_._1)
-    TextRetrieval.removeFromPositionalIndex(spark, ix,
-      docs.filter(col("doc_id") % 7L === 2L).select(col("doc_id")))
-    assert(TxLog.manifest(spark, s"$ix/postings_pos").map(_._1) == before,
-      "delete must tombstone, not rewrite")
-    val survivors = docs.filter(col("doc_id") % 7L =!= 2L)
     assert(asSet(TextRetrieval.phraseTopKIndexed(spark, ix, ph, 5)) ==
-      asSet(TextRetrieval.phraseTopK(survivors, ph, 5)))
-    // empty delete set: full no-op
-    val v = TxLog.latestVersion(spark, s"$ix/postings_pos")
-    TextRetrieval.removeFromPositionalIndex(spark, ix,
-      docs.filter(col("doc_id") < 0).select(col("doc_id")))
-    assert(TxLog.latestVersion(spark, s"$ix/postings_pos") == v)
-    // fragmentation measured, compaction restores probe-reads-one and
-    // materializes the tombstones; answers and history unchanged
+      asSet(TextRetrieval.phraseTopK(docs, ph, 5)))
+    // each append epoch adds its own batches across the token range
     val term = docs.select(explode(split(col("text"), "\\s+")).as("tok"))
       .filter(length(col("tok")) > 0).orderBy(col("tok")).limit(1)
       .head().getString(0)
-    def probeFiles(): Int = TxLog
+    val probeFiles = TxLog
       .readWhereIn(spark, s"$ix/postings_pos", "tok", Seq(term))
       .inputFiles.length
-    assert(probeFiles() >= 3, "expected one batch per append epoch")
-    TextRetrieval.compactPositionalIndex(spark, ix, batches = 8)
-    assert(probeFiles() == 1, "compaction must restore probe-reads-one")
-    assert(asSet(TextRetrieval.phraseTopKIndexed(spark, ix, ph, 5)) ==
-      asSet(TextRetrieval.phraseTopK(survivors, ph, 5)))
-    assert(asSet(TextRetrieval.phraseTopKIndexed(spark, ix, ph, 5, asOf = Some(v))) ==
-      asSet(TextRetrieval.phraseTopK(survivors, ph, 5)))
+    assert(probeFiles >= 3, "expected one batch per append epoch")
+    // history: the pre-append version answers over the first third
+    assert(asSet(TextRetrieval.phraseTopKIndexed(spark, ix, ph, 5, asOf = Some(1L))) ==
+      asSet(TextRetrieval.phraseTopK(docs.filter(col("doc_id") < third), ph, 5)))
   }
 
   test("autoCompactIndex acts only when probe amplification is measured (r9 #7)") {
@@ -527,26 +374,6 @@ class IndexSpec extends AnyFunSuite {
       "auto-compaction must not change answers")
     assert(!TextRetrieval.autoCompactIndex(spark, ix),
       "re-tightened layout must be a no-op again")
-  }
-
-  test("autoCompactPositionalIndex: measure-then-act on the positions table (r9 #7)") {
-    val ix = fresh("pos_autocompact")
-    val half = docs.count() / 2
-    TextRetrieval.buildPositionalIndex(spark, ix,
-      docs.filter(col("doc_id") < half), batches = 4)
-    assert(!TextRetrieval.autoCompactPositionalIndex(spark, ix))
-    TextRetrieval.appendToPositionalIndex(spark, ix,
-      docs.filter(col("doc_id") >= half), batches = 2)
-    TextRetrieval.appendToPositionalIndex(spark, ix,
-      docs.filter(col("doc_id") < 0), batches = 2) // empty: no-op append
-    assert(TextRetrieval.autoCompactPositionalIndex(spark, ix),
-      "fragmented positions table must compact")
-    val ph = docs.filter(col("doc_id") % 97L === 1L)
-      .select(col("doc_id").as("query_id"),
-        expr("concat_ws(' ', slice(split(text, '\\\\s+'), 2, 3))").as("phrase"))
-    assert(asSet(TextRetrieval.phraseTopKIndexed(spark, ix, ph, 5)) ==
-      asSet(TextRetrieval.phraseTopK(docs, ph, 5)))
-    assert(!TextRetrieval.autoCompactPositionalIndex(spark, ix))
   }
 
   test("proximity semantics: unordered within window; scattered scores zero") {

@@ -41,12 +41,4 @@ object RoutingProps extends Properties("Routing") {
         r.duration_sec.isEmpty == isIsland
       }
     }
-
-  property("chunk labels cover [0, n) without gaps or overlaps") =
-    Prop.forAll(Gen.choose(1L, 100000L), Gen.choose(1L, 9000L)) { (n, size) =>
-      val ls = graft.routing.Chunks.labels(n, size)
-      val spans = ls.map { l => val Array(a, b) = l.split("-"); (a.toLong, b.toLong) }
-      spans.head._1 == 0L && spans.last._2 == n &&
-        spans.sliding(2).forall { case Seq((_, e), (s, _)) => e == s; case _ => true }
-    }
 }

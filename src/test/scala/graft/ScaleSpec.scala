@@ -38,7 +38,7 @@ class ScaleSpec extends AnyFunSuite {
     val dim = (0L until 97L).map(k => (k, s"dim_$k")).toDF("k", "name")
     val plain = fact.join(dim, Seq("k")).select("k", "v", "name")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
-    val saltedDf = graft.operators.Skew.saltedJoin(fact, dim, "k", salts = 8)
+    val saltedDf = graft.operators.SkewJoin.salted(fact, dim, "k", salts = 8, saltSource = col("v"))
     val salted = saltedDf.select("k", "v", "name")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
     assert(salted == plain)

@@ -1,7 +1,6 @@
 package graft
 
 import graft.plans.WeightedMeanAgg
-import graft.routing.Chunks
 import graft.schemas.Schemas
 import graft.sources.TableIO
 import org.apache.spark.sql.functions._
@@ -92,13 +91,5 @@ class SchemaSpec extends AnyFunSuite {
     formula.foreach { case (k, v) =>
       assert(math.abs(declarative(k) - v) < 1e-9, s"group $k")
     }
-  }
-
-  test("chunk labels: zero-padded, covering, sorted (F4 / utils.py:106-138)") {
-    assert(Chunks.labels(25, 10) == Seq("00-10", "10-20", "20-25"))
-    assert(Chunks.chunkSize(100000, 5000, 4) == 25000)
-    assert(Chunks.chunkSize(100, 5000, 4) == 100) // min cap dominates small n
-    val ls = Chunks.labels(100000, 25000)
-    assert(ls.size == 4 && ls == ls.sorted)
   }
 }

@@ -111,25 +111,6 @@ class SimilaritySpec extends AnyFunSuite {
     assert(recall >= 0.3, s"recall $recall")
   }
 
-  test("IVF ANN recalls a planted duplicate; nontrivial recall on random data") {
-    import org.apache.spark.sql.functions.col
-    val base = emb.select("vec_id", "embedding")
-    val planted = base.filter(col("vec_id") === 7)
-      .select((col("vec_id") + 8993).as("vec_id"), col("embedding"))
-    val corpus = base.unionByName(planted)
-    val out = Similarity.ivfTopK(corpus, corpus.filter(col("vec_id") === 9000), k = 1)
-      .collect()
-    assert(out.length == 1 && out.head.getAs[Long]("neighbor_id") == 7L)
-
-    val brute = Similarity.cosineTopK(emb, emb.filter(col("vec_id") < 20), 5).collect()
-      .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id"))).toSet
-    val ivf = Similarity.ivfTopK(emb, emb.filter(col("vec_id") < 20), 5).collect()
-      .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id"))).toSet
-    val recall = brute.count(ivf.contains).toDouble / brute.size
-    info(s"IVF recall@5 on random vectors: $recall")
-    assert(recall >= 0.3, s"recall $recall")
-  }
-
   test("fused SignBuckets expression equals the unfused pmPlane/vecDot formulation") {
     val s = spark
     import s.implicits._

@@ -102,19 +102,6 @@ class TextStreamSpec extends AnyFunSuite {
     assert(stream == batch)
   }
 
-  test("streaming KMV distinct estimate equals the batch sketch (custom agg under streaming state)") {
-    val batch = Tables.events(spark, sf0001)
-      .groupBy((expr("ts div 3600000000000") * 3600).as("hour_epoch"))
-      .agg(
-        graft.plans.KmvSketchAgg.kmvEstimate(col("user_id"), 32).as("est_users"),
-        count(lit(1)).as("n"))
-      .collect().map(r => r.getLong(0) -> (r.getDouble(1), r.getLong(2))).toMap
-    val stream = StreamingOps.hourlyDistinctUsers(spark, sf0001, "spec_stream_kmv")
-      .collect().map(r => r.getLong(0) -> (r.getDouble(1), r.getLong(2))).toMap
-    assert(stream == batch)
-    assert(batch.nonEmpty)
-  }
-
   test("stateful streaming sessionization matches batch sessions (modulo the open tail session)") {
     val batch = graft.operators.Sessionize.batch(Tables.events(spark, sf0001))
       .collect()
@@ -138,68 +125,20 @@ class TextStreamSpec extends AnyFunSuite {
     }
   }
 
-  test("state TTL flushes idle sessions exactly (event-time timeout)") {
-    val batch = graft.operators.Sessionize.batch(Tables.events(spark, sf0001))
-      .collect()
-      .map(r => (r.getAs[Long]("user_id"), r.getAs[Long]("session_id")) ->
-        (r.getAs[Long]("session_start"), r.getAs[Long]("n_events"), r.getAs[Double]("total_value")))
-      .toMap
-    val noTtl = graft.operators.Sessionize.streaming(spark, sf0001, "spec_sessions_nottl")
-      .count()
-    val ttl = graft.operators.Sessionize.streamingWithTTL(spark, sf0001, "spec_sessions_ttl")
-      .collect()
-      .map(r => (r.getAs[Long]("user_id"), r.getAs[Long]("session_id")) ->
-        (r.getAs[Long]("session_start"), r.getAs[Long]("n_events"), r.getAs[Double]("total_value")))
-      .toMap
-    // every emitted session (gap-closed or TTL-flushed) matches batch exactly
-    val mismatches = ttl.filter { case (k, v) => !batch.get(k).contains(v) }
-    assert(mismatches.isEmpty, s"${mismatches.take(3)}")
-    // the timeout flushed sessions the NoTimeout variant kept open forever
-    assert(ttl.size > noTtl, s"TTL emitted ${ttl.size}, NoTimeout emitted $noTtl")
-    assert(ttl.size <= batch.size)
-  }
-
-  test("stream-stream interval join matches the batch join") {
-    val batch = {
-      val e = Tables.events(spark, sf0001)
-        .select(col("user_id"), col("event_id"), col("event_type"),
-          expr("ts div 1000").as("us"))
-      val p = e.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("event_id").as("purchase_event"), col("us").as("p_us"))
-      val s_ = e.filter(col("event_type") === "signup")
-        .select(col("user_id").as("s_user"), col("event_id").as("signup_event"), col("us").as("s_us"))
-      p.join(s_, col("user_id") === col("s_user") &&
-          col("s_us") <= col("p_us") && col("s_us") >= col("p_us") - 3600L * 1000000L)
-        .select(col("user_id"), col("purchase_event"), col("signup_event"))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    }
-    val stream = graft.streaming.StreamingOps
-      .streamStreamFunnel(spark, sf0001, "spec_ss_join")
-      .collect()
-      .map(r => (r.getAs[Long]("user_id"), r.getAs[Long]("purchase_event"), r.getAs[Long]("signup_event")))
-      .toSet
-    assert(stream == batch, s"stream ${stream.size} vs batch ${batch.size}")
-    assert(batch.nonEmpty)
-  }
-
   test("training-prep filters run unchanged on a document stream (decontaminate + mixture sample)") {
     val s = spark
     import s.implicits._
     import graft.operators.TrainingPrep
     val docs = Tables.documents(s, sf0001)
-    val bench = docs.filter($"doc_id" % 17 === 0)
     val weights = Map("src0" -> 1.0, "src1" -> 0.5, "src2" -> 0.25)
-    val batch = TrainingPrep.mixtureSample(
-        TrainingPrep.decontaminateStreamable(docs.filter($"doc_id" % 17 =!= 0), bench, 8),
-        weights)
+    val batch = TrainingPrep.mixtureSample(docs.filter($"doc_id" % 17 =!= 0), weights)
       .select("doc_id").as[Long].collect().toSet
     val stream = s.readStream
       .schema(docs.schema)
       .option("pathGlobFilter", "documents.parquet")
       .parquet(sf0001)
       .filter($"doc_id" % 17 =!= 0)
-    val filtered = TrainingPrep.mixtureSample(
-      TrainingPrep.decontaminateStreamable(stream, bench, 8), weights)
+    val filtered = TrainingPrep.mixtureSample(stream, weights)
     val q = filtered.select("doc_id").writeStream
       .outputMode("append").format("memory").queryName("spec_tp_stream").start()
     try q.processAllAvailable()
@@ -207,49 +146,6 @@ class TextStreamSpec extends AnyFunSuite {
     val got = s.table("spec_tp_stream").as[Long].collect().toSet
     assert(got == batch, s"stream ${got.size} vs batch ${batch.size}")
     assert(batch.nonEmpty)
-  }
-
-  test("rolling streaming dedup: pairs accumulated over micro-batches equal the full batch run") {
-    val s = spark
-    import s.implicits._
-    val base = "/tmp/graft_incr_stream"
-    org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-      .delete(new org.apache.hadoop.fs.Path(base), true)
-    val docs = Tables.documents(s, sf0001).select($"doc_id", $"text")
-    // two arrival waves with distinct mod times → two micro-batches
-    docs.filter($"doc_id" % 3 =!= 0).repartition(1)
-      .write.parquet(s"$base/in")
-    Thread.sleep(1100)
-    docs.filter($"doc_id" % 3 === 0).repartition(1)
-      .write.mode("append").parquet(s"$base/in")
-    val streamed = StreamingOps.streamingIncrementalDedup(s, s"$base/in", s"$base/state")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val full = graft.operators.Dedup.minhashPairs(docs)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(streamed == full, s"streamed ${streamed.size} vs batch ${full.size}")
-    assert(full.nonEmpty)
-    // exactly-once: no pair may have been emitted by two batches
-    val streamedList = s.read.parquet(s"$base/state/pairs")
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    assert(streamedList.length == streamedList.distinct.length, "pair emitted twice")
-  }
-
-  test("streaming publish lands the layout contract (string keys, readable tree)") {
-    val out = "/tmp/graft_stream_publish_spec"
-    org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-      .delete(new org.apache.hadoop.fs.Path(out), true)
-    val back = StreamingOps.streamingPublish(spark, sf0001, out)
-    val batch = Tables.events(spark, sf0001)
-    assert(back.count() == batch.count())
-    // partition keys recovered as strings (the state='01' contract)
-    assert(back.schema("event_type").dataType.typeName == "string")
-    assert(back.schema("hour").dataType.typeName == "string")
-    // per-partition content matches the batch grouping
-    val streamed = back.groupBy("event_type").count()
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val expected = batch.groupBy("event_type").count()
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(streamed == expected)
   }
 
   test("streaming dedup: dropDuplicates on the stream matches batch distinct") {
@@ -295,14 +191,5 @@ class TextStreamSpec extends AnyFunSuite {
     assert(streamed == batch, s"sizes: streamed=${streamed.size} batch=${batch.size}")
     // the watermark-proven outer tail actually exercises: nulls must exist
     assert(streamed.exists(_._3.isEmpty))
-  }
-
-  test("watermarked append-mode output is a subset of complete-mode output") {
-    val complete = StreamingOps.hourlyCounts(spark, sf0001, "spec_stream_c")
-      .collect().map(r => (r.getLong(0), r.getString(1)) -> r.getLong(2)).toMap
-    val append = StreamingOps.hourlyCountsWatermarked(spark, sf0001, "spec_stream_wm")
-      .collect().map(r => (r.getLong(0), r.getString(1)) -> r.getLong(2)).toMap
-    assert(append.forall { case (k, v) => complete.get(k).contains(v) },
-      s"append rows not in complete: ${append.keySet.diff(complete.keySet).take(5)}")
   }
 }

@@ -45,18 +45,6 @@ class TrainingPrepSpec extends AnyFunSuite {
     assert(kept1 === Seq(3L))
   }
 
-  test("decontaminateStreamable equals decontaminate at minHits=1 on the fixture corpus") {
-    val d = Tables.documents(spark, sf0001)
-    val bench = d.filter($"doc_id" % 17 === 0)
-    val corpus = d.filter($"doc_id" % 17 =!= 0)
-    val viaJoin = TrainingPrep.decontaminate(corpus, bench, n = 8)
-      .select("doc_id").as[Long].collect().sorted
-    val viaFilter = TrainingPrep.decontaminateStreamable(corpus, bench, n = 8)
-      .select("doc_id").as[Long].collect().sorted
-    assert(viaJoin sameElements viaFilter)
-    assert(viaJoin.length < corpus.count(), "fixture must actually flag some docs")
-  }
-
   test("importanceWeights survives Long-overflowing intermediates (decimal path)") {
     // scale·(cnt_t+1)·totr must exceed 2⁶³ to catch the old wrapped-Long
     // path: with scale=1e15, 7 target tokens of 'x' and 11 total tokens,
@@ -217,31 +205,6 @@ class TrainingPrepSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       .sortBy(_._1).toSeq
     assert(a != b, "re-seeding must re-shuffle")
-  }
-
-  test("writeShards: one file per shard, rows in shard_pos order (r10)") {
-    val out = s"${GraftSession.scratchBase}/graft_shards_spec"
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(out), true)
-    val assigned = TrainingPrep.shardAssign(
-      spark.range(0L, 300L).select(col("id").as("doc_id")), nShards = 5)
-    TrainingPrep.writeShards(assigned, out)
-    val back = spark.read.parquet(out)
-    assert(back.count() == 300L)
-    // hive layout: one data file per shard directory
-    (0 until 5).foreach { k =>
-      val files = fs.globStatus(
-        new org.apache.hadoop.fs.Path(s"$out/shard=$k/part-*.parquet"))
-      assert(files.length == 1, s"shard $k must be one file, got ${files.length}")
-    }
-    // within-file order IS shard_pos order (the dataloader contract):
-    // a monotonic check over the file's physical row order
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("shard")).orderBy(monotonically_increasing_id())
-    val disorder = back
-      .withColumn("prev", lag(col("shard_pos"), 1).over(w))
-      .filter(col("prev").isNotNull && col("prev") >= col("shard_pos"))
-    assert(disorder.isEmpty, "rows must land in shard_pos order")
   }
 }
 

@@ -230,42 +230,6 @@ class TxCdfSpec extends AnyFunSuite {
     feed.unpersist()
   }
 
-  test("maintainAggViewStream: continuous maintenance ≡ batch fold at every cut (r9 #5)") {
-    import graft.operators.Cdc
-    val t = fresh("mavs_src"); val v = fresh("mavs_view")
-    val cp = fresh("mavs_cp")
-    def recompute(): DataFrame = TxLog.read(spark, t)
-      .groupBy(col("g")).agg(count(lit(1)).as("n"), sum(col("v")).as("total"))
-    def view(): DataFrame = TxLog.read(spark, v).drop("_maintained_to", "_nn")
-    TxLog.commit(spark, t, data(0L, 200L))
-    val q = Cdc.maintainAggViewStream(spark, t, v, Seq("g"), "v", cp)
-    try {
-      q.processAllAvailable()
-      assert(sameBag(view(), recompute()), "initial snapshot fold")
-      // append + DV delete flow through as they commit
-      TxLog.commit(spark, t, data(200L, 300L), append = true)
-      q.processAllAvailable()
-      assert(sameBag(view(), recompute()), "append fold")
-      TxLog.deleteVectored(spark, t, "k", Some(50L), Some(120L))
-      q.processAllAvailable()
-      assert(sameBag(view(), recompute()), "delete fold")
-      // an idle trigger (no new source version) must not commit
-      val vv = TxLog.latestVersion(spark, v)
-      q.processAllAvailable()
-      assert(TxLog.latestVersion(spark, v) == vv, "replay must no-op")
-    } finally q.stop()
-    // commits landing while the stream is DOWN fold on restart,
-    // exactly once (watermark rides in the view, not the checkpoint)
-    TxLog.commit(spark, t, data(300L, 350L), append = true)
-    TxLog.purgeDeletes(spark, t) // merge requires a vector-free table
-    TxLog.merge(spark, t, data(10L, 20L).withColumn("v", col("v") + 777L), "k")
-    val q2 = Cdc.maintainAggViewStream(spark, t, v, Seq("g"), "v", cp)
-    try {
-      q2.processAllAvailable()
-      assert(sameBag(view(), recompute()), "restart catch-up fold")
-    } finally q2.stop()
-  }
-
   test("an emptied view refolds from the SNAPSHOT — vacuum-safe from-zero (review)") {
     import graft.operators.Cdc
     val t = fresh("mav_empty"); val v = fresh("mav_empty_view")

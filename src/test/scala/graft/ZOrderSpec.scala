@@ -43,8 +43,11 @@ class ZOrderSpec extends AnyFunSuite {
 
     val zDir = "/tmp/graft_zorder_spec/z"
     val linDir = "/tmp/graft_zorder_spec/linear"
-    ZOrder.writeClustered(grid, zDir, Seq("x", "y"), bits = 9,
-      partitions = 8, rowGroupBytes = 64 * 1024)
+    grid.withColumn("__z", ZOrder.zValue(Seq($"x", $"y"), bits = 9))
+      .repartitionByRange(8, $"__z").sortWithinPartitions($"__z").drop("__z")
+      .write.mode("overwrite")
+      .option("parquet.block.size", (64 * 1024).toString)
+      .parquet(zDir)
     grid.repartitionByRange(8, $"x").sortWithinPartitions($"x")
       .write.mode("overwrite")
       .option("parquet.block.size", (64 * 1024).toString)
