@@ -38,17 +38,14 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
       .config("spark.sql.parquet.compression.codec", "zstd")
-      .config("spark.sql.autoBroadcastJoinThreshold", (64L << 20).toString)
-      // AQE sort-merge → shuffled-hash rewrite (guide §3.1): decided at
-      // runtime from REAL map-output sizes (never estimates), so the
-      // no-broadcast guarantees of the merge-pinned joins survive while
-      // the per-partition sorts disappear when every partition fits a
-      // local hash map. Parameterised because the safe value is a
-      // per-task memory bound: ≤ executor heap / cores / ~3 (hash-map
-      // expansion). Local default 0 (off) keeps the bench comparable;
-      // see OPTIMIZATION_r12.md for the measured decision.
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_SHJ_THRESHOLD", "0"))
+      // The one broadcast policy: Catalyst sizes a plan from COMPRESSED
+      // file bytes, so a frame it under-reads can only build a bounded
+      // broadcast; larger sides are left to AQE, whose adaptive threshold
+      // follows this one and reads measured shuffle bytes. 1 MiB lies
+      // below every corpus-scaled join side of the 10x probe corpus
+      // (smallest: q133/q210's per-doc frames, 1.13 MiB estimated).
+      .config("spark.sql.autoBroadcastJoinThreshold", (1L << 20).toString)
+      // No AQE shuffled-hash rewrite: measured no win on q210 (OPTIMIZATION_r12.md).
       .config("spark.ui.enabled", "false")
       .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
     if (master.nonEmpty) b.master(master) else b

@@ -126,38 +126,6 @@ object Dedup {
           .as("dup_coverage"))
   }
 
-  /** Actual-size gate for the corpus-scaled merge pins (the round-7
-    * lesson cuts BOTH ways): Catalyst estimates exploded shingle frames
-    * from the COMPRESSED text scan, so near the broadcast threshold it
-    * happily builds gigabyte broadcasts — the 100× probe's driver OOM.
-    * But an UNCONDITIONAL sort-merge pin forbids broadcasting provably
-    * tiny sides and costs small corpora ~2× latency (q133 measured
-    * 3.0s → 5.2s at sf0.1). So pin only when the side's estimated
-    * SERIALIZED bytes could outgrow a safe broadcast build:
-    * threshold/4, budgeting the ~4× Java-object expansion a broadcast
-    * hash relation pays over serialized rows. With broadcasting
-    * disabled (threshold <= 0) no broadcast can happen and the pin is
-    * free — keep it (the plan specs assert ReusedExchange under
-    * exactly that config).
-    */
-  private def pinLarge(estBytes: Long): Boolean = {
-    val thr = org.apache.spark.sql.internal.SQLConf.get.autoBroadcastJoinThreshold
-    thr <= 0L || estBytes > thr / 4
-  }
-
-  /** One narrow agg over the text column: (total chars, docs). The
-    * cheap upstream measurement the pin gates derive exploded-side
-    * estimates from — rows ≈ chars/5 (avg token ~5 chars), so an
-    * n-gram shingle frame serializes to ~chars·n for the strings plus
-    * ~28 bytes/row of row+pointer overhead ≈ chars·(n+6).
-    */
-  private def textStats(docs: DataFrame): (Long, Long) = {
-    val r = docs.agg(
-      coalesce(sum(length(col("text"))), lit(0L)),
-      count(lit(1))).head()
-    (r.getLong(0), r.getLong(1))
-  }
-
   /** (doc_id, grams): each document's word n-grams in text order (docs
     * shorter than n words have none — Spark's sequence() would go
     * descending on a negative span, hence the pre-filter).
@@ -201,21 +169,13 @@ object Dedup {
   def ngramPairs(docs: DataFrame, n: Int, threshold: Double, maxDf: Option[Int] = None): DataFrame = {
     val g = dfCapped(shingles(docs, n), maxDf)
     val sizes = g.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
-    // corpus-proportional sides pinned to sort-merge WHEN BIG: the
-    // shingle frame and the per-doc size table are estimated from the
-    // COMPRESSED text scan, so near the broadcast threshold the planner
-    // would broadcast gigabytes of exploded shingles (see minhashPairs'
-    // verify note); a measured-tiny corpus keeps the broadcast plans
-    val (chars, _) = textStats(docs)
-    def mp(df: DataFrame): DataFrame =
-      if (pinLarge(chars * (n + 6L))) df.hint("merge") else df
-    val inter = g.as("ga").join(mp(g.as("gb")),
+    val inter = g.as("ga").join(g.as("gb"),
         col("ga.gram") === col("gb.gram") && col("ga.doc_id") < col("gb.doc_id"))
       .groupBy(col("ga.doc_id").as("id_a"), col("gb.doc_id").as("id_b"))
       .agg(count(lit(1)).as("both"))
     inter
-      .join(mp(sizes.select(col("doc_id").as("id_a"), col("sz").as("na"))), Seq("id_a"))
-      .join(mp(sizes.select(col("doc_id").as("id_b"), col("sz").as("nb"))), Seq("id_b"))
+      .join(sizes.select(col("doc_id").as("id_a"), col("sz").as("na")), Seq("id_a"))
+      .join(sizes.select(col("doc_id").as("id_b"), col("sz").as("nb")), Seq("id_b"))
       .withColumn("jaccard", col("both").cast("double") / (col("na") + col("nb") - col("both")))
       .filter(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), col("jaccard"))
@@ -263,48 +223,15 @@ object Dedup {
           explode(array_distinct(split(col("text"), " "))).as("tok"))
       else shingles(docs, n).withColumnRenamed("gram", "tok"),
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    // the eager checkpoint makes an EXACT size measurement nearly free
-    // (one agg over cached blocks): gate every corpus-scaled pin on it
-    // — pin when big (the 100× task-OOM fix), let Catalyst broadcast
-    // when measured-tiny (recovers the small-corpus latency the
-    // unconditional pins cost, round-7 finding #3)
-    val sizeRow = toks.agg(count(lit(1)),
-      coalesce(sum(length(col("tok"))), lit(0L)),
-      count_distinct(col("doc_id"))).head()
-    val nToks = sizeRow.getLong(0)
-    val strBytes = sizeRow.getLong(1)
-    val nDocs = sizeRow.getLong(2)
-    // PER-FRAME gates (the round-9 ADVICE: a hinted frame's estimate
-    // must include ITS OWN columns, or a corpus near the boundary
-    // under-estimates and re-admits the broadcast OOM — while gating
-    // every frame on the widest model over-pins and re-pays the
-    // unconditional-pin latency round 7 measured):
-    //  - (doc_id, tok) verify frames: strings + ~28 B row overhead;
-    //  - `pre` adds df/rn/sz longs (52 B/row) but holds ONLY the prefix
-    //    subset — per doc sz − ceil(t·sz) + 1 ≤ (1−t)·sz + 1 rows, an
-    //    EXACT bound, so its estimate scales by (1−threshold) plus one
-    //    avg-width row per doc;
-    //  - per-doc `sizes`: three longs a row.
-    val toksBytes = strBytes + 28L * nToks
-    val avgRow = strBytes / math.max(nToks, 1L) + 52L
-    val preBytes =
-      ((strBytes + 52L * nToks) * (1.0 - threshold)).toLong + avgRow * nDocs
-    val sizesBytes = 36L * nDocs
-    def mp(df: DataFrame): DataFrame =
-      if (pinLarge(toksBytes)) df.hint("merge") else df
-    def mpPre(df: DataFrame): DataFrame =
-      if (pinLarge(preBytes)) df.hint("merge") else df
-    def mpSizes(df: DataFrame): DataFrame =
-      if (pinLarge(sizesBytes)) df.hint("merge") else df
     val dfreq = toks.groupBy(col("tok")).agg(count(lit(1)).as("df"))
     val bySize = Window.partitionBy(col("doc_id")).orderBy(col("df"), col("tok"))
-    // vocabulary-scaled side, never broadcast when big (minhashPairs' note)
     // NOT pinned (r12 measured): localCheckpointing the small-regime
     // `pre` re-ran q133 at 1.34× the baseline min — the pin's job
     // barrier + storage round-trip costs more than re-evaluating the
     // dfreq+window chain on a small corpus, and in the big regime the
-    // merge pin already collapses both sides to one ReusedExchange.
-    val pre = toks.join(mp(dfreq), "tok")
+    // sort-merge self-join already collapses both sides to one
+    // ReusedExchange.
+    val pre = toks.join(dfreq, "tok")
       .withColumn("rn", row_number().over(bySize))
       .withColumn("sz", count(lit(1)).over(Window.partitionBy(col("doc_id"))))
       .filter(col("rn") <= col("sz") - ceil(lit(threshold) * col("sz")) + 1)
@@ -317,8 +244,8 @@ object Dedup {
     // pin loss: the explicit exchange is a stage barrier, while the
     // duplicated lazy `pre` branches run CONCURRENTLY on an
     // underutilized local[32] and are near-free wall-clock. The big
-    // regime never needed it (merge hints collapse both sides to one
-    // exchange), so the duplicate stays.
+    // regime never needed it (a sort-merge self-join collapses both
+    // sides to one exchange), so the duplicate stays.
     // Candidate generation with the SSJoin family's two EXACT pruning
     // filters (both are upper bounds on the pair's best possible
     // Jaccard, so neither can drop a qualifying pair):
@@ -335,7 +262,7 @@ object Dedup {
     // On low-entropy corpora (small shared vocabulary) these kill the
     // bulk of prefix collisions BEFORE the token-level verify fan-out —
     // the filters, not the verify, absorb the hot-vocabulary blowup.
-    val cand = pre.as("a").join(mpPre(pre.as("b")),
+    val cand = pre.as("a").join(pre.as("b"),
         col("a.tok") === col("b.tok") && col("a.doc_id") < col("b.doc_id") &&
           least(col("a.sz"), col("b.sz")).cast("double") /
             greatest(col("a.sz"), col("b.sz")) >= threshold)
@@ -354,19 +281,17 @@ object Dedup {
     // sizes come from the token-LEVEL equi-join instead: fan candidate
     // pairs out to (pair, tok) via doc_a's tokens, equi-join on
     // (doc_b, tok), count — bit-identical |A ∩ B|, rows never wider
-    // than (long, long, token). Set sizes join in afterward. All
-    // corpus-scaled sides pinned to sort-merge (never broadcast — the
-    // probe's driver-OOM lesson).
+    // than (long, long, token). Set sizes join in afterward.
     val sizes = toks.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
     val inter = cand
-      .join(mp(toks.select(col("doc_id").as("doc_a"), col("tok"))), Seq("doc_a"))
-      .join(mp(toks.select(col("doc_id").as("doc_b"), col("tok"))),
+      .join(toks.select(col("doc_id").as("doc_a"), col("tok")), Seq("doc_a"))
+      .join(toks.select(col("doc_id").as("doc_b"), col("tok")),
         Seq("doc_b", "tok"))
       .groupBy(col("doc_a"), col("doc_b"))
       .agg(count(lit(1)).as("inter"))
     inter
-      .join(mpSizes(sizes.select(col("doc_id").as("doc_a"), col("sz").as("na"))), Seq("doc_a"))
-      .join(mpSizes(sizes.select(col("doc_id").as("doc_b"), col("sz").as("nb"))), Seq("doc_b"))
+      .join(sizes.select(col("doc_id").as("doc_a"), col("sz").as("na")), Seq("doc_a"))
+      .join(sizes.select(col("doc_id").as("doc_b"), col("sz").as("nb")), Seq("doc_b"))
       .withColumn("jac",
         col("inter").cast("double") / (col("na") + col("nb") - col("inter")))
       .filter(col("jac") >= threshold)
@@ -405,17 +330,11 @@ object Dedup {
     val dfreq = grams.groupBy(col("gram")).agg(count(lit(1)).as("df"))
     val byRarity = Window.partitionBy(col("doc_id"))
       .orderBy(col("df"), col("gram"), col("pos"))
-    // dfreq is VOCABULARY-scaled (grows with the corpus) with a
-    // compressed-scan-derived estimate — never broadcast it when big
-    // (positional q-grams: ~1 row/char, ~q+32 serialized bytes/row)
-    val (chars, _) = textStats(txt)
-    def mp(df0: DataFrame): DataFrame =
-      if (pinLarge(chars * (q + 32L))) df0.hint("merge") else df0
-    val pre = grams.join(mp(dfreq), "gram")
+    val pre = grams.join(dfreq, "gram")
       .withColumn("rn", row_number().over(byRarity))
       .filter(col("rn") <= q * d + 1)
       .select(col("doc_id"), col("len"), col("gram"), col("pos"))
-    val candLong = pre.as("a").join(mp(pre.as("b")),
+    val candLong = pre.as("a").join(pre.as("b"),
         col("a.gram") === col("b.gram") &&
         col("a.doc_id") < col("b.doc_id") &&
         abs(col("a.pos") - col("b.pos")) <= d &&
@@ -496,13 +415,11 @@ object Dedup {
   /** Exact Jaccard of the candidate pairs (id_a, id_b) at or above
     * `threshold`: each pair meets the two per-document gram arrays and
     * intersects them in place — no gram-level rows, no extra aggregate.
-    * `hint` marks the (corpus-scaled) gram-array join sides.
     */
-  private def verified(candidates: DataFrame, g: DataFrame, threshold: Double,
-      hint: DataFrame => DataFrame = identity): DataFrame =
+  private def verified(candidates: DataFrame, g: DataFrame, threshold: Double): DataFrame =
     candidates
-      .join(hint(g.select(col("doc_id").as("id_a"), col("grams").as("ga"))), Seq("id_a"))
-      .join(hint(g.select(col("doc_id").as("id_b"), col("grams").as("gb"))), Seq("id_b"))
+      .join(g.select(col("doc_id").as("id_a"), col("grams").as("ga")), Seq("id_a"))
+      .join(g.select(col("doc_id").as("id_b"), col("grams").as("gb")), Seq("id_b"))
       .withColumn("both", size(array_intersect(col("ga"), col("gb"))).cast("long"))
       .withColumn("jaccard", col("both").cast("double") /
         (size(col("ga")).cast("long") + size(col("gb")) - col("both")))
@@ -541,37 +458,17 @@ object Dedup {
     val g = gramSets(docs, n, maxDf)
     val sigs = bandRows(g, nHashes, nBands)
 
-    // size-gated pins (see pinLarge): the gram-array estimate comes from
-    // one narrow text agg; the signature table is docs × nHashes
-    // fixed-width rows. NOT localCheckpointed (r12 measured): eager
-    // pins of sigs + a candidate-pruned shingle frame re-ran q41 at
-    // 1.48× the baseline min — each pin is a job barrier + storage
-    // round-trip that outweighs re-deriving these frames, and in the
-    // big regime the merge hints below make both self-join sides
-    // canonicalize to ONE exchange (ReusedExchange) anyway.
-    val (chars, nDocs) = textStats(docs)
-    def mpG(df: DataFrame): DataFrame =
-      if (pinLarge(chars * (n + 6L))) df.hint("merge") else df
-    def mpS(df: DataFrame): DataFrame =
-      if (pinLarge(nDocs * nHashes * 28L)) df.hint("merge") else df
-
-    // the signature table is corpus-scaled too (nHashes mins per doc):
-    // pin the self-join to sort-merge when big — hints are erased into
-    // JoinHint before physical planning, so both sides still canonicalize
-    // to the SAME exchange and the ReusedExchange the plan spec asserts
-    // survives (that spec disables broadcast, which keeps the pin on)
-    val candidates = sigs.as("sa").join(mpS(sigs.as("sb")),
+    // NOT localCheckpointed (r12 measured): eager pins of sigs + a
+    // candidate-pruned shingle frame re-ran q41 at 1.48× the baseline
+    // min — each pin is a job barrier + storage round-trip that outweighs
+    // re-deriving these frames. When the self-join plans sort-merge, both
+    // sides canonicalize to ONE exchange (ReusedExchange).
+    val candidates = sigs.as("sa").join(sigs.as("sb"),
         col("sa.band") === col("sb.band") && col("sa.bucket") === col("sb.bucket") &&
           col("sa.doc_id") < col("sb.doc_id"))
       .select(col("sa.doc_id").as("id_a"), col("sb.doc_id").as("id_b"))
       .distinct()
-
-    // The gram arrays are corpus-PROPORTIONAL but Catalyst estimates
-    // them from the compressed text scan, so near the broadcast
-    // threshold the planner can elect to broadcast gigabytes of them —
-    // the 100× probe hit exactly that (driver OOM building the
-    // broadcast). Pin them to sort-merge whenever they could be big.
-    verified(candidates, g, threshold, mpG)
+    verified(candidates, g, threshold)
   }
 
   /** Incremental MinHash dedup: near-dup pairs TOUCHING a batch of new

@@ -500,10 +500,8 @@ object Similarity {
     */
   def ivfTopKIndexed(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, queries: DataFrame, k: Int,
-      nProbe: Int = 4, asOf: Option[Long] = None): DataFrame = {
+      nProbe: Int = 4): DataFrame = {
     import graft.sources.TxLog
-    // `asOf` names a cells-table version; the centroids are written
-    // once per build
     val seeds = TxLog.read(spark, s"$indexDir/centroids")
     // query-bounded; pinned because both the probed-cell collect and
     // the candidate join consume it
@@ -517,7 +515,7 @@ object Similarity {
       return emptyAnn(spark)
     graft.plans.TxStatsRule.register(s"$indexDir/cells")
     val cells = TxLog.readWhereIn(spark, s"$indexDir/cells", "cell",
-        probedCells, asOf)
+        probedCells)
       .select(col("vec_id").as("neighbor_id"), col("embedding").as("cv"),
         col("cell"))
     val w = Window.partitionBy(col("query_id"))
@@ -735,12 +733,11 @@ object Similarity {
     * k·oversample winners' raw vectors are point-read back. Same
     * quantizers, same fixed-order arithmetic, same tie-breaks ⇒
     * bit-identical to the recompute path (q227 hash-pins it against
-    * q226's oracle SQL). `asOf` names one version of the
-    * cellcodes/vectors pair.
+    * q226's oracle SQL).
     */
   def ivfPqTopKIndexed(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, queries: DataFrame, k: Int, nProbe: Int = 4,
-      oversample: Int = 4, asOf: Option[Long] = None): DataFrame = {
+      oversample: Int = 4): DataFrame = {
     import graft.sources.TxLog
     val coarse = TxLog.read(spark, s"$indexDir/centroids")
     val cb = TxLog.read(spark, s"$indexDir/codebook")
@@ -757,7 +754,7 @@ object Similarity {
     graft.plans.TxStatsRule.register(s"$indexDir/cellcodes")
     graft.plans.TxStatsRule.register(s"$indexDir/vectors")
     val codes = TxLog.readWhereIn(spark, s"$indexDir/cellcodes", "cell",
-      probedCells, asOf)
+      probedCells)
     val qsubs = queries.select(col("vec_id").as("query_id") +:
       (0 until m).map(i => sub(col("embedding"), i).as(s"q$i")): _*)
     // ≤ |queries|·k·oversample rows; pinned because the id collect and
@@ -769,7 +766,7 @@ object Similarity {
     if (candIds.isEmpty)
       return emptyAnn(spark)
     val cv = TxLog.readWhereIn(spark, s"$indexDir/vectors", "vec_id",
-        candIds, asOf)
+        candIds)
       .select(col("vec_id").as("neighbor_id"), col("embedding").as("cv"))
     val qv = queries.select(col("vec_id").as("query_id"),
       col("embedding").as("qv"))

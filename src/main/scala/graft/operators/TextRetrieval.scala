@@ -97,10 +97,9 @@ object TextRetrieval {
     * Scale shape: one corpus tokenization feeds tf/dl/df aggregates
     * (ordinary combiner shuffles); the QUERY side is bounded and
     * broadcast, so candidate generation is a map-side semi-join of the
-    * postings — docs sharing no query term never materialize. The df
-    * and dl joins are pinned to sort-merge (vocabulary- and
-    * corpus-scaled sides must never be broadcast — the 100× probe's
-    * driver-OOM lesson). Per-query ranking is a top-k window keyed by
+    * postings — docs sharing no query term never materialize. The dl
+    * join's strategy is the session's (see [[graft.GraftSession]]'s
+    * broadcast threshold). Per-query ranking is a top-k window keyed by
     * query_id; its cost is the posting-list length of the query's
     * terms, the classic inverted-index bound — stopword-heavy queries
     * degrade toward a corpus scan; [[bm25TopKPruned]] is the
@@ -149,8 +148,11 @@ object TextRetrieval {
     val postsWithDf = st.tf.join(broadcast(qToks), "tok")
       .withColumn("df", count(lit(1)).over(Window.partitionBy(col("tok"))))
       .join(broadcast(qTerms), "tok")
-    val scores = postsWithDf
-      .join(dlP.hint("merge"), "doc_id")
+    // by doc before scoring: the tok window leaves each stopword's whole
+    // posting list in one partition, and a broadcast dl join would score
+    // it there (q210 at sf0.1: 2.7 s vs 1.7 s with this exchange)
+    val scores = postsWithDf.repartition(col("doc_id"))
+      .join(dlP, "doc_id")
       .crossJoin(broadcast(tot))
       .withColumn("c", expr(ContribSql))
       .groupBy(col("query_id"), col("doc_id"))
@@ -180,9 +182,7 @@ object TextRetrieval {
     *  4. exact scoring runs only over candidate docs' postings
     *     (semi-joined by doc, then by (query, term)), with the
     *     query-bounded df slice broadcast and dl confined to
-    *     candidates. The candidate set is MEASURED (the dedup pins'
-    *     actual-size gate): small → broadcast semi-joins, the pinned
-    *     posting frame never reshuffles; large → sort-merge.
+    *     candidates.
     *
     * Every drop is justified by an arithmetic bound, never an
     * estimate, so results stay hash-verifiable against the same oracle
@@ -227,7 +227,7 @@ object TextRetrieval {
   /** The max-score machinery shared by [[bm25Pruned]] (in-flight corpus
     * stats) and [[bm25TopKPrunedIndexed]] (stats read from the committed
     * index): bounds, θ seeding, essential-term candidate generation,
-    * measured-size scoring joins. `ptf` = pinned postings of the query
+    * scoring joins. `ptf` = pinned postings of the query
     * vocabulary (tok, doc_id, tf); `dlP` = (doc_id, dl); `glob` = one
     * row (t_total, n_docs, dlmin, dlmax).
     */
@@ -282,30 +282,18 @@ object TextRetrieval {
       .select(col("query_id"), col("tok"))
     // candidate (query, doc) pairs: one essential-term posting suffices;
     // non-essential (stopword) posting lists never expand here. The set
-    // is pinned and MEASURED so the scoring semi-joins can broadcast
-    // when provably safe and fall back to sort-merge when not.
+    // is pinned: both scoring semi-joins read it.
     val cand = Pins.pin(ptf.join(broadcast(ess), "tok")
       .select(col("query_id"), col("doc_id")).distinct())
-    val thr = org.apache.spark.sql.internal.SQLConf.get.autoBroadcastJoinThreshold
-    val candN = cand.count()
     val candDocs = cand.select(col("doc_id")).distinct()
-    // independent gates: the doc set is usually far smaller than the
-    // (query, doc) pair set — broadcast each only when provably safe
-    val smallDocs = thr > 0L && candDocs.count() * 32L <= thr / 4
-    val smallPairs = thr > 0L && candN * 48L <= thr / 4
-    def semiDocs(df: DataFrame): DataFrame =
-      if (smallDocs) df.join(broadcast(candDocs), Seq("doc_id"), "left_semi")
-      else df.join(candDocs.hint("merge"), Seq("doc_id"), "left_semi")
     // exact scoring over candidate docs' postings only: expand by doc,
     // keep (query, term) pairs of the query, df broadcast, dl confined
-    val candPosts = semiDocs(ptf)
+    val survPosts = ptf.join(candDocs, Seq("doc_id"), "left_semi")
       .join(broadcast(qTerms), "tok") // attach query_id per matching query
-      .join(if (smallPairs) broadcast(cand) else cand.hint("merge"),
-        Seq("query_id", "doc_id"), "left_semi")
-    val survPosts = candPosts
+      .join(cand, Seq("query_id", "doc_id"), "left_semi")
     val scores = survPosts
       .join(broadcast(termStats.select(col("tok"), col("df"))), "tok")
-      .join(semiDocs(dlP).hint("merge"), "doc_id")
+      .join(dlP.join(candDocs, Seq("doc_id"), "left_semi"), "doc_id")
       .crossJoin(broadcast(glob.select(col("t_total"), col("n_docs"))))
       .withColumn("c", expr(ContribSql))
       .groupBy(col("query_id"), col("doc_id"))
@@ -449,9 +437,7 @@ object TextRetrieval {
     * identical stored aggregates ⇒ scores are bit-for-bit
     * [[bm25TopK]]'s (q221 hash-pins it against q210's oracle SQL).
     *
-    * No hand join pins here (contrast [[bm25TopK]]'s dl `hint("merge")`
-    * — forced because Catalyst sizes in-flight frames from the
-    * compressed text scan): the index tables are REGISTERED TxLog scans
+    * No hand join pins: the index tables are REGISTERED TxLog scans
     * whose manifest-exact row counts reach the planner via
     * [[graft.plans.TxStatsRule]], so broadcast-vs-merge is decided from
     * real counts at any scale.

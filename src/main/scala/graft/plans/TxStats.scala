@@ -16,16 +16,17 @@ import org.apache.spark.sql.types._
   * Without this, join planning sizes a parquet scan by its FILE BYTES
   * (`HadoopFsRelation.sizeInBytes`), and zstd text compresses so hard
   * that a multi-GB-in-memory frame can look broadcastable — the
-  * driver-OOM failure mode the operator-level `hint("merge")` pins
-  * exist to prevent. The TxLog manifest already holds the EXACT footer
-  * row count of every batch (harvested free at commit; tombstones NOT
+  * driver-OOM failure mode that [[graft.GraftSession]]'s small static
+  * broadcast threshold bounds for frames no manifest describes. The
+  * TxLog manifest already holds the EXACT footer row count of every
+  * batch (harvested free at commit; tombstones NOT
   * subtracted — they don't apply to asOf scans of the same dirs, and
   * over-estimating is the safe direction for broadcast decisions);
   * this rule reports it through the relation as
   * `CatalogStatistics(rowCount, rowCount × schema-derived row width)`,
   * so broadcast-vs-merge flips on real cardinalities at any scale —
-  * the planner makes the decision the pins hand-made, from data. The
-  * index-backed retrieval paths ([[graft.operators.TextRetrieval
+  * the planner makes the decision from data. The index-backed
+  * retrieval paths ([[graft.operators.TextRetrieval
   * .bm25TopKIndexed]], [[graft.operators.Similarity.ivfTopKIndexed]])
   * carry NO join hints for exactly this reason.
   *

@@ -135,8 +135,7 @@ object TableIO {
       val w = toWrite.write
         .mode(mode)
         .option("compression", "zstd")
-        .option("parquet.compression.codec.zstd.level",
-          sys.env.getOrElse("SPARK_GRAFT_ZSTD_LEVEL", "3"))
+        // parquet's default zstd level 3: level 1 measured no win on q36 (OPTIMIZATION_r12.md)
         .option("maxRecordsPerFile", maxRecordsPerFile)
       val wb = bloomCols.foldLeft(w) { case (acc, (c, ndv)) =>
         acc.option(s"parquet.bloom.filter.enabled#$c", "true")

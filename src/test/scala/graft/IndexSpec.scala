@@ -273,7 +273,7 @@ class IndexSpec extends AnyFunSuite {
 
   // -------------------------------------------------------------- IVF-PQ
 
-  test("indexed IVF-PQ ≡ recompute; frozen-quantizer append; time travel") {
+  test("indexed IVF-PQ ≡ recompute on a one-version index; empty queries give empty") {
     val ix = fresh("ivfpq")
     val half = emb.count() / 2
     assert(half > 32, "first half must contain both seed blocks [0,32)")
@@ -283,9 +283,10 @@ class IndexSpec extends AnyFunSuite {
     // fresh build answers exactly as the recompute over the same corpus
     assert(asSet(Similarity.ivfPqTopKIndexed(spark, ix, q, 5)) ==
       asSet(Similarity.ivfPqTopK(oldEmb, q, 5)))
-    // one committed version: asOf = 1 names the same code+vector pair
-    assert(asSet(Similarity.ivfPqTopKIndexed(spark, ix, q, 5, asOf = Some(1L))) ==
-      asSet(Similarity.ivfPqTopK(oldEmb, q, 5)))
+    // a build commits exactly one version of the code+vector pair
+    Seq("cellcodes", "vectors").foreach { t =>
+      assert(TxLog.latestVersion(spark, s"$ix/$t") == 1L, t)
+    }
     // empty queries degrade like the recompute path
     assert(Similarity.ivfPqTopKIndexed(spark, ix,
       emb.filter(col("vec_id") < 0), 5).isEmpty)
@@ -324,7 +325,7 @@ class IndexSpec extends AnyFunSuite {
       ph.filter(col("query_id") < 0), 5).isEmpty)
   }
 
-  test("positional index lifecycle: tombstone delete, compaction, history") {
+  test("positional index: two appends ≡ recompute, a batch per epoch, asOf = 1 history") {
     val ix = fresh("phrase_life")
     val third = docs.count() / 3
     TextRetrieval.buildPositionalIndex(spark, ix,

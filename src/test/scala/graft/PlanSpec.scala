@@ -1,5 +1,9 @@
 package graft
 
+import org.apache.spark.sql.catalyst.optimizer.BuildRight
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Plan-shape assertions: the optimizations the engine's 100 TB story
@@ -125,6 +129,40 @@ class PlanSpec extends AnyFunSuite {
     val p = df.queryExecution.executedPlan.toString
     assert(p.contains("ReusedExchange"),
       "minhash banded self-join did not reuse the signature exchange:\n" + p.take(2000))
+  }
+
+  test("minhash verify join: gram arrays broadcast when tiny, sort-merge above threshold") {
+    // The operators carry no join hints: the session's static broadcast
+    // threshold decides, and AQE may only broadcast what measured
+    // shuffle bytes allow. Own sessions: isolated SQLConf (see q94).
+    object Aqe extends AdaptiveSparkPlanHelper
+    def grams(p: SparkPlan) = p.output.exists(a => a.name == "ga" || a.name == "gb")
+    def broadcastGrams(p: SparkPlan) = Aqe.collect(p) {
+      case j: BroadcastHashJoinExec
+          if grams(if (j.buildSide == BuildRight) j.right else j.left) => j
+    }
+    def mergeGrams(p: SparkPlan) = Aqe.collect(p) {
+      case j: SortMergeJoinExec if grams(j.left) || grams(j.right) => j
+    }
+    def run(s: org.apache.spark.sql.SparkSession) = {
+      val df = graft.operators.Dedup.minhashPairs(Tables.documents(s, sf0001))
+      df.collect()
+      df.queryExecution.executedPlan.asInstanceOf[AdaptiveSparkPlanExec]
+    }
+    val tiny = run(spark.newSession())
+    assert(broadcastGrams(tiny.executedPlan).size == 2,
+      "a tiny corpus must broadcast both gram-array sides:\n" + tiny.executedPlan)
+    // a threshold below the corpus scan's own estimate: the planner
+    // picks sort-merge, and the measured gram arrays (larger than the
+    // compressed-scan estimate) keep AQE from broadcasting them later
+    val s = spark.newSession()
+    val scanEst = Tables.documents(s, sf0001).queryExecution.optimizedPlan.stats.sizeInBytes
+    s.conf.set("spark.sql.autoBroadcastJoinThreshold", (scanEst / 8).toString)
+    val big = run(s)
+    assert(mergeGrams(big.initialPlan).size == 2,
+      "gram-array joins must plan sort-merge:\n" + big.initialPlan)
+    assert(broadcastGrams(big.executedPlan).isEmpty,
+      "AQE must not broadcast a gram-array side:\n" + big.executedPlan)
   }
 
   test("q109: duplicated spans plan is one gram exchange, no join, no cartesian") {

@@ -50,15 +50,12 @@ class TextRetrievalSpec extends AnyFunSuite {
     assert(TextRetrieval.bm25TopK(docs, q).count() == 0L)
   }
 
-  test("plan shape: query side broadcast, dl sort-merge, df from the filtered postings") {
+  test("plan shape: query side broadcast, df from the filtered postings") {
     val q = Seq((1L, "apple"), (1L, "cherry")).toDF("query_id", "tok")
     val plan = TextRetrieval.bm25TopK(docs, q)
       .queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"),
       "bounded query-term set must broadcast")
-    assert("SortMergeJoin".r.findAllIn(plan).size >= 1,
-      "the dl join must stay sort-merge (never broadcast a " +
-        "corpus-scaled side)")
     // r12: df no longer joins a full-vocabulary aggregate — it rides the
     // query-filtered postings as a tok-keyed window (tf is unique per
     // (doc, tok), so the window count IS the corpus-wide df)

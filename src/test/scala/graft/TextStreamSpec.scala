@@ -125,7 +125,7 @@ class TextStreamSpec extends AnyFunSuite {
     }
   }
 
-  test("training-prep filters run unchanged on a document stream (decontaminate + mixture sample)") {
+  test("mixture sample runs unchanged on a document stream") {
     val s = spark
     import s.implicits._
     import graft.operators.TrainingPrep
