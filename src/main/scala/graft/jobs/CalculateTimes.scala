@@ -1,9 +1,11 @@
 package graft.jobs
 
 import graft.routing._
+import graft.schemas.Schemas
 import graft.sources.TableIO
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.collection.immutable.ListMap
 
 /** The compute job — SURVEY §3.1 (/root/reference/data/src/
   * calculate_times.py:23-148) as one lazy Spark pipeline:
@@ -13,9 +15,10 @@ import org.apache.spark.sql.functions._
   *
   * Where the reference fans out with a GitHub-Actions matrix per
   * (year, state) and a thread pool per chunk, here the whole OD space is
-  * one job: the chunk grid is data (J8) and Spark's scheduler is the
-  * matrix. Partition-level parallelism, AQE, and the ordered-publish sink
-  * (O3) replace CI-level orchestration.
+  * one job: the chunk grid is a range of block indices over the two
+  * driver-side point sets and Spark's scheduler is the matrix.
+  * Partition-level parallelism, AQE, and the ordered-publish sink (O3)
+  * replace CI-level orchestration.
   */
 object CalculateTimes {
 
@@ -47,6 +50,17 @@ object CalculateTimes {
     */
   def stateOf(id: Column): Column = substring(id, 8, 2)
 
+  /** `df` plus the partition literals of every tree the job publishes;
+    * `state` is optional because `metadata` has no state level.
+    */
+  def withPartitionCols(df: DataFrame, cfg: Config, state: Option[Column]): DataFrame =
+    df.withColumns(ListMap(
+      "version" -> lit(cfg.version),
+      "mode" -> lit(cfg.mode),
+      "year" -> lit(cfg.year),
+      "geography" -> lit(cfg.geography)) ++ state.map("state" -> _) +
+      ("centroid_type" -> lit(cfg.centroidType)))
+
   /** `failpoint` is a crash-injection seam for specs: it fires after
     * each tree publish inside the atomic commit; a throw reproduces the
     * coordinator dying between table publishes — the exact window
@@ -77,21 +91,19 @@ object CalculateTimes {
     try {
 
     // 2. route on snapped coords (times.py routes the snapped frame when
-    // use_snapped; P6 already coalesced failures back to raw coords)
-    def routed(ps: Dataset[SnappedPoint]): Dataset[RoutePoint] =
-      if (cfg.useSnapped) ps.map(p => RoutePoint(p.id, p.lon_snapped, p.lat_snapped))
-      else ps.map(p => RoutePoint(p.id, p.lon, p.lat))
+    // use_snapped; P6 already coalesced failures back to raw coords). The
+    // collects fill the two point caches, and their lengths are the
+    // audit's point counts.
+    def routed(ps: Dataset[SnappedPoint]): Array[RoutePoint] =
+      (if (cfg.useSnapped) ps.map(p => RoutePoint(p.id, p.lon_snapped, p.lat_snapped))
+       else ps.map(p => RoutePoint(p.id, p.lon, p.lat))).collect()
+    val os = routed(oSnap)
+    val ds = routed(dSnap)
     val times = TravelTimeMatrix.run(
-      spark, routed(oSnap), routed(dSnap), router,
-      cfg.oSplit, cfg.dSplit, cfg.maxDepth).toDF()
+      spark, os, ds, router, cfg.oSplit, cfg.dSplit, cfg.maxDepth).toDF()
 
-    val partCols: DataFrame => DataFrame = df => df
-      .withColumn("version", lit(cfg.version))
-      .withColumn("mode", lit(cfg.mode))
-      .withColumn("year", lit(cfg.year))
-      .withColumn("geography", lit(cfg.geography))
-      .withColumn("state", stateOf(col("origin_id")))
-      .withColumn("centroid_type", lit(cfg.centroidType))
+    val partCols: DataFrame => DataFrame =
+      withPartitionCols(_, cfg, Some(stateOf(col("origin_id"))))
 
     // 3. The matrix is routed EXACTLY ONCE, straight into the times sink —
     // never cached (at the reference's national scale the matrix is ~140 B
@@ -125,7 +137,9 @@ object CalculateTimes {
       tx.staged("times"), Seq("origin_id", "destination_id"),
       bloomCols = Seq("destination_id" -> 100000L))
 
-    val writtenPairs = spark.read.parquet(tx.staged("times"))
+    // the known two-column schema: no inference job, and the same pruned
+    // scan serves the anti-join and the audit count
+    val writtenPairs = TableIO.readPartitioned(spark, tx.staged("times"), Some(Schemas.missingPairs))
       .select(col("origin_id"), col("destination_id"))
     val allPairs = oSnap.select(col("id").as("origin_id"))
       .crossJoin(dSnap.select(col("id").as("destination_id")))
@@ -136,24 +150,17 @@ object CalculateTimes {
       tx.staged("missing_pairs"), Seq("origin_id", "destination_id"))
 
     // 4. points table (point_type as 7th partition level — times.py:168-172)
-    val points = Snap.pointsTable(oSnap, dSnap)
-      .withColumn("state", stateOf(col("id")))
     TableIO.writePartitioned(
-      points
-        .withColumn("version", lit(cfg.version))
-        .withColumn("mode", lit(cfg.mode))
-        .withColumn("year", lit(cfg.year))
-        .withColumn("geography", lit(cfg.geography))
-        .withColumn("centroid_type", lit(cfg.centroidType)),
+      withPartitionCols(Snap.pointsTable(oSnap, dSnap), cfg, Some(stateOf(col("id")))),
       tx.staged("points"), Seq("id"),
       partitionKeys = TableIO.PartitionKeys :+ "point_type")
 
     // 5. metadata audit row (calculate_times.py:96-133 / FIXTURES §B8).
-    // n_missing comes from the written tree (a parquet metadata count),
-    // NOT from re-evaluating the matrix.
-    val nO = oSnap.count()
-    val nD = dSnap.count()
-    val nMissing = nO * nD - spark.read.parquet(tx.staged("times")).count()
+    // n_missing comes from the written tree, NOT from re-evaluating the
+    // matrix.
+    val nO = os.length.toLong
+    val nD = ds.length.toLong
+    val nMissing = nO * nD - writtenPairs.count()
     def md5Of(p: Option[String]): String =
       p.map(graft.sources.TableIO.fileMd5(spark, _)).getOrElse("")
     // one run covers the whole OD space, so the chunk span is the full
@@ -180,12 +187,7 @@ object CalculateTimes {
         "param_max_split_size", "param_use_snapped",
         "file_input_origins_md5", "file_input_destinations_md5")
     // metadata is one row per run spanning every state → no state level
-    meta
-      .withColumn("version", lit(cfg.version))
-      .withColumn("mode", lit(cfg.mode))
-      .withColumn("year", lit(cfg.year))
-      .withColumn("geography", lit(cfg.geography))
-      .withColumn("centroid_type", lit(cfg.centroidType))
+    withPartitionCols(meta, cfg, None)
       .write.mode("overwrite")
       .option("compression", "zstd")
       .partitionBy(TableIO.PartitionKeys.filterNot(_ == "state"): _*)

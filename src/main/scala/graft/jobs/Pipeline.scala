@@ -3,9 +3,11 @@ package graft.jobs
 import graft.etl.{Centroids, Destpoint, OsmClip}
 import graft.geo.{Geometry, Tiles}
 import graft.routing._
+import graft.schemas.Schemas
 import graft.sources.{GeoJson, OsmPbf, Shapefile, TableIO}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** The reference's DVC dependency graph run in-engine — `dvc repro` over
   * `data/dvc.yaml:1-150` (fetch_tiger → fetch_blockpop → create_blockloc
@@ -41,14 +43,13 @@ object Pipeline {
     new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Row count of a published partitioned table, where "no rows ever
-    * landed" (a directory holding only _SUCCESS — what a fully-routable
-    * run's missing_pairs looks like) counts as 0 rather than a
-    * schema-inference error.
+  /** Row count of a published partitioned table read with its registry
+    * `schema`: a tree where no rows ever landed (only _SUCCESS — what a
+    * fully-routable run's missing_pairs looks like) counts 0, and an
+    * absent tree throws instead of reading as empty.
     */
-  def countPartitioned(spark: SparkSession, dir: String): Long =
-    try TableIO.readPartitioned(spark, dir).count()
-    catch { case _: org.apache.spark.sql.AnalysisException => 0L }
+  def countPartitioned(spark: SparkSession, dir: String, schema: StructType): Long =
+    TableIO.readPartitioned(spark, dir, Some(schema)).count()
 
   /** Stable digest of a path (file or directory) for change detection.
     *
@@ -341,8 +342,9 @@ object Pipeline {
         check = () => {
           val times = TableIO.readPartitioned(spark, s"$out/times")
           val meta = spark.read.parquet(s"$out/metadata").head
-          require(times.count() + countPartitioned(spark, s"$out/missing_pairs") ==
-            meta.getAs[Long]("calc_n_pairs"), "pair conservation")
+          val nMissing = countPartitioned(spark, s"$out/missing_pairs", Schemas.missingPairs)
+          require(times.count() + nMissing == meta.getAs[Long]("calc_n_pairs"),
+            "pair conservation")
           require(times.filter($"duration_sec".isNull).isEmpty, "null duration in times")
         }),
 
@@ -355,7 +357,7 @@ object Pipeline {
           // partition structure); an empty missing_pairs publishes nothing
           TableIO.writeConsumerIndex(spark, s"$out/times", s"$out/index/times.json")
           TableIO.writeConsumerIndex(spark, s"$out/points", s"$out/index/points.json")
-          if (countPartitioned(spark, s"$out/missing_pairs") > 0)
+          if (countPartitioned(spark, s"$out/missing_pairs", Schemas.missingPairs) > 0)
             TableIO.writeConsumerIndex(spark, s"$out/missing_pairs",
               s"$out/index/missing_pairs.json")
         }),

@@ -1,7 +1,8 @@
 package graft.jobs
 
 import graft.routing._
-import graft.sources.TableIO
+import graft.schemas.Schemas
+import graft.sources.{TableIO, TreeTxn}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -17,7 +18,9 @@ import org.apache.spark.sql.functions._
   *     accretes files, which [[graft.sources.TableIO.compact]] folds);
   *  3. rewrite `missing_pairs` to the still-missing remainder, derived
   *     from the WRITTEN tree (the same write-once principle as
-  *     [[CalculateTimes]] — no in-memory matrix is trusted twice);
+  *     [[CalculateTimes]] — no in-memory matrix is trusted twice), and
+  *     publish it through a [[TreeTxn]] under the job's `_txn` dir, so a
+  *     crash never leaves the tree absent;
   *  4. pair-count conservation holds at every step:
   *     |times| + |missing| is invariant.
   *
@@ -36,6 +39,8 @@ object Reconcile {
     * (typically a fresh/healthy instance of the same backend) and merge.
     * Points are re-read from the published points table — snapped coords,
     * exactly what the original run routed (`use_snapped` contract).
+    * `failpoint` is the crash-injection seam of the `missing_pairs`
+    * publish, as in [[CalculateTimes.run]].
     */
   def missingPairs(
       spark: SparkSession,
@@ -44,16 +49,20 @@ object Reconcile {
       cfg: CalculateTimes.Config,
       oSplit: Int = 5000,
       dSplit: Int = 5000,
-      maxDepth: Int = 12): Result = {
+      maxDepth: Int = 12,
+      failpoint: String => Unit = _ => ()): Result = {
     import spark.implicits._
     val timesDir = s"$outDir/times"
     val missingDir = s"$outDir/missing_pairs"
     val pointsDir = s"$outDir/points"
+    val txnDir = s"$outDir/_txn"
 
-    val nBefore = Pipeline.countPartitioned(spark, missingDir)
+    // finish (or erase) a crashed run's publish before counting anything
+    TreeTxn.recover(spark, txnDir)
+    val nBefore = Pipeline.countPartitioned(spark, missingDir, Schemas.missingPairs)
     if (nBefore == 0) return Result(0, 0, 0)
 
-    val missing = TableIO.readPartitioned(spark, missingDir)
+    val missing = TableIO.readPartitioned(spark, missingDir, Some(Schemas.missingPairs))
       .select("origin_id", "destination_id")
     // bounded state: the distinct ids of the failed pairs (id strings
     // only; at the reference's scale missing pairs are a thin slice, and
@@ -64,19 +73,14 @@ object Reconcile {
       .join(missing.select(col(idCol).as("id")).distinct(), Seq("id"), "left_semi")
       .select(col("id"), col("lon_snapped").as("lon"), col("lat_snapped").as("lat"))
       .as[RoutePoint]
+      .collect()
 
     val rerouted = TravelTimeMatrix.run(
       spark, side("origin", "origin_id"), side("destination", "destination_id"),
       router, oSplit, dSplit, maxDepth).toDF()
 
     val partCols: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
-      df => df
-        .withColumn("version", lit(cfg.version))
-        .withColumn("mode", lit(cfg.mode))
-        .withColumn("year", lit(cfg.year))
-        .withColumn("geography", lit(cfg.geography))
-        .withColumn("state", CalculateTimes.stateOf(col("origin_id")))
-        .withColumn("centroid_type", lit(cfg.centroidType))
+      CalculateTimes.withPartitionCols(_, cfg, Some(CalculateTimes.stateOf(col("origin_id"))))
 
     // only pairs that were actually missing AND now routed are merged —
     // the rest of the sub-product is already in the tree
@@ -90,23 +94,20 @@ object Reconcile {
 
     // still-missing = published missing minus what the WRITTEN tree now
     // covers (2-column pruned scan of the appended tree)
-    val covered = spark.read.parquet(timesDir)
+    val covered = TableIO.readPartitioned(spark, timesDir, Some(Schemas.missingPairs))
       .select("origin_id", "destination_id")
     val still = missing.join(covered, Seq("origin_id", "destination_id"), "left_anti")
 
-    // rewrite missing_pairs via tmp + swap (it is being read lazily above,
-    // so an in-place overwrite would clobber its own input)
-    val tmp = s"$missingDir.reconcile_tmp"
+    // stage the remainder beside the live tree (which `missing` is still
+    // reading lazily) and swap it in by the atomic tree publish
+    val tx = TreeTxn.begin(spark, txnDir, Seq("missing_pairs" -> missingDir))
     TableIO.writePartitioned(
       partCols(still).select("version", "mode", "year", "geography", "state",
         "centroid_type", "origin_id", "destination_id"),
-      tmp, Seq("origin_id", "destination_id"))
-    val fs = new org.apache.hadoop.fs.Path(outDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(missingDir), true)
-    fs.rename(new org.apache.hadoop.fs.Path(tmp), new org.apache.hadoop.fs.Path(missingDir))
+      tx.staged("missing_pairs"), Seq("origin_id", "destination_id"))
+    tx.commit(failpoint)
 
-    val nAfter = Pipeline.countPartitioned(spark, missingDir)
+    val nAfter = Pipeline.countPartitioned(spark, missingDir, Schemas.missingPairs)
     Result(nBefore, nBefore - nAfter, nAfter)
   }
 }

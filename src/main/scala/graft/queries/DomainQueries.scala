@@ -131,8 +131,8 @@ object DomainQueries extends QueryPack {
       destIsland = p => (p.id.toLong - 500000) % 41 == 0)
     TravelTimeMatrix.run(
       s,
-      originsDf(s, dir).as[RoutePoint],
-      destsDf(s, dir).as[RoutePoint],
+      originsDf(s, dir).as[RoutePoint].collect(),
+      destsDf(s, dir).as[RoutePoint].collect(),
       router,
       oSplit = 512, dSplit = 64,
       // depth must cover log2(oSplit) so islands isolate to 1×1 —
@@ -782,10 +782,10 @@ object DomainQueries extends QueryPack {
         val dest = Destpoint.run(cenlocFrame(s, dir), boundary, buffer = 1.0)
         val origins = dest.select(
           concat(lit("O"), $"geoid").as("id"),
-          $"x_wt".as("lon"), $"y_wt".as("lat")).as[RoutePoint]
+          $"x_wt".as("lon"), $"y_wt".as("lat")).as[RoutePoint].collect()
         val dests = dest.select(
           concat(lit("D"), $"geoid").as("id"),
-          $"x_wt".as("lon"), $"y_wt".as("lat")).as[RoutePoint]
+          $"x_wt".as("lon"), $"y_wt".as("lat")).as[RoutePoint].collect()
         TravelTimeMatrix.run(s, origins, dests,
           new SyntheticRouter(speedMps = 30.0),
           oSplit = 2, dSplit = 2, maxDepth = 4).toDF()

@@ -312,8 +312,8 @@ object NetworkQueries extends QueryPack {
           gridNodes(s, dir), gridWays(s, dir, mixed = false, dagOnly = false))
         val rt = RoadNetwork.router(s, e)
         TravelTimeMatrix.run(s,
-          matrixOrigins(s, dir, 0).as[RoutePoint],
-          matrixDests(s, dir, 0).as[RoutePoint],
+          matrixOrigins(s, dir, 0).as[RoutePoint].collect(),
+          matrixDests(s, dir, 0).as[RoutePoint].collect(),
           rt, oSplit = 1000, dSplit = 500, maxDepth = 3).toDF()
       },
       Some(s"WITH ${matrixSql("FALSE", "FALSE")}")),
@@ -346,8 +346,8 @@ object NetworkQueries extends QueryPack {
         // result via distributed CC — NetworkSpec holds them equal
         val rt = RoadNetwork.routerPruned(s, e)
         TravelTimeMatrix.run(s,
-          matrixOrigins(s, dir, 23).as[RoutePoint],
-          matrixDests(s, dir, 29).as[RoutePoint],
+          matrixOrigins(s, dir, 23).as[RoutePoint].collect(),
+          matrixDests(s, dir, 29).as[RoutePoint].collect(),
           rt, oSplit = 1000, dSplit = 500, maxDepth = 3).toDF()
       },
       Some(s"WITH ${matrixSql("o.key % 23 = 0", "d.key % 29 = 0")}"),
@@ -366,8 +366,8 @@ object NetworkQueries extends QueryPack {
           gridNodes(s, dir), gridWays(s, dir, mixed = false, dagOnly = false))
         val rt = RoadNetwork.chRouter(s, e)
         TravelTimeMatrix.run(s,
-          matrixOrigins(s, dir, 0).as[RoutePoint],
-          matrixDests(s, dir, 0).as[RoutePoint],
+          matrixOrigins(s, dir, 0).as[RoutePoint].collect(),
+          matrixDests(s, dir, 0).as[RoutePoint].collect(),
           rt, oSplit = 1000, dSplit = 500, maxDepth = 3).toDF()
       },
       Some(s"WITH ${matrixSql("FALSE", "FALSE")}"),
@@ -416,7 +416,8 @@ object NetworkQueries extends QueryPack {
         val rt = RoadNetwork.restrictedRouter(s, e, bannedDf)
         val pts = tNodes.select(
           concat(lit("P"), $"id".cast("string")).as("id"), $"lon", $"lat")
-        TravelTimeMatrix.run(s, pts.as[RoutePoint], pts.as[RoutePoint], rt,
+        val rps = pts.as[RoutePoint].collect()
+        TravelTimeMatrix.run(s, rps, rps, rt,
           oSplit = 1000, dSplit = 500, maxDepth = 3).toDF()
       },
       Some(s"""WITH o AS (
@@ -477,8 +478,8 @@ object NetworkQueries extends QueryPack {
         val rt = RoadNetwork.router(s,
           RoadNetwork.contractChains(e, keep = Some(grid.select("id"))))
         TravelTimeMatrix.run(s,
-          matrixOrigins(s, dir, 0).as[RoutePoint],
-          matrixDests(s, dir, 0).as[RoutePoint],
+          matrixOrigins(s, dir, 0).as[RoutePoint].collect(),
+          matrixDests(s, dir, 0).as[RoutePoint].collect(),
           rt, oSplit = 1000, dSplit = 500, maxDepth = 3).toDF()
       },
       Some(s"WITH ${matrixSql("FALSE", "FALSE")}")),
@@ -498,8 +499,8 @@ object NetworkQueries extends QueryPack {
           RoadNetwork.Foot)
         val rt = RoadNetwork.router(s, e)
         TravelTimeMatrix.run(s,
-          matrixOrigins(s, dir, 0).as[RoutePoint],
-          matrixDests(s, dir, 0).as[RoutePoint],
+          matrixOrigins(s, dir, 0).as[RoutePoint].collect(),
+          matrixDests(s, dir, 0).as[RoutePoint].collect(),
           rt, oSplit = 1000, dSplit = 500, maxDepth = 3).toDF()
       },
       Some(s"WITH ${matrixSql("FALSE", "FALSE", stepSec = 11132.0)}")),

@@ -3,10 +3,10 @@ package graft.routing
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.SqlBridge
 import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
+import scala.collection.immutable.ArraySeq
 
 /** The travel-time matrix operator — the computational heart of the
   * reference (SURVEY §2.9), re-expressed for Spark's execution model.
@@ -23,75 +23,60 @@ import org.apache.spark.unsafe.types.UTF8String
   *    emitted with NULL duration (times.py:485-586) and become
   *    `missing_pairs` downstream.
   *
-  * Spark design: instead of a thread pool on one node, the chunk grid is a
-  * DataFrame of block descriptors (J8) that Spark schedules across
-  * executors. Each block row carries its origin/destination point arrays
-  * (bounded by maxSplit, so ≤ ~5000 points each — the reference's own
-  * memory bound, data/params.yaml:43-47); routing + quadtree recursion run
-  * task-locally inside flatMap with no shuffle. The Cartesian expansion
-  * happens inside the operator, so no crossJoin of the full point sets
-  * ever materializes.
+  * Spark design: instead of a thread pool on one node, the chunk grid is
+  * a range of block indices that Spark schedules across executors. The
+  * point sets are O(n) beside the O(n²) matrix (~240k block groups
+  * nationally), so they are sorted by id on the driver and broadcast;
+  * block `b` routes origin chunk `b / nDc` × destination chunk `b % nDc`,
+  * contiguous slices of the sorted sets as in the reference's
+  * `.sort_values("id")` + `.iloc` tiling (times.py:289-301, 344).
+  * Routing + quadtree recursion run task-locally with no shuffle.
   *
   * Scale notes (100 TB / 1000-executor thinking):
-  *  - chunk indices come from a distributed zipWithIndex on the id-sorted
-  *    points (O1 ordering, times.py:344) — no single-partition window;
-  *  - block count = ceil(n/oSplit) × ceil(m/dSplit); repartitioned to the
-  *    cluster's parallelism before routing so every core gets blocks;
-  *  - per-task memory is O(oSplit + dSplit + oSplit×dSplit) — the same
-  *    envelope the reference enforces per request.
+  *  - the sort uses Spark's string order (UTF-8 bytes, as `orderBy("id")`),
+  *    so depth-capped NULL pairs keep the reference's chunk membership;
+  *  - block count = ceil(n/oSplit) × ceil(m/dSplit), spread over the
+  *    default parallelism so every core gets blocks;
+  *  - per-task memory is the two point arrays plus one block's
+  *    O(oSplit×dSplit) table — the reference's per-request envelope
+  *    (data/params.yaml:43-47).
   */
-final case class IndexedPoint(cid: Long, idx: Long, pt: RoutePoint)
-final case class PointChunk(cid: Long, pts: Seq[RoutePoint])
-
 object TravelTimeMatrix {
 
-  /** Deterministically index `points` by sorted id and group into chunks
-    * of `size`, returning chunkId → points-in-id-order. zipWithIndex is
-    * the distributed deterministic index (no single-partition window).
+  /** `points` in Spark's string order of their ids: UTF-8 byte order
+    * ([[UTF8String.compareTo]]), which differs from `String` (UTF-16)
+    * order above the BMP. Stable, like the reference's sort.
     */
-  private def chunk(points: Dataset[RoutePoint], size: Int)(
-      implicit spark: SparkSession): Dataset[PointChunk] = {
-    import spark.implicits._
-    val indexed = points
-      .orderBy("id")
-      .rdd
-      .zipWithIndex()
-      .map { case (p, i) => IndexedPoint(i / size, i, p) }
-      .toDS()
-    indexed
-      .groupBy($"cid")
-      .agg(sort_array(collect_list(struct($"idx".as("_1"), $"pt".as("_2")))).as("ipts"))
-      .select($"cid", expr("transform(ipts, x -> x._2)").as("pts"))
-      .as[PointChunk]
-  }
+  private def byId(points: collection.Seq[RoutePoint]): Array[RoutePoint] =
+    points.map(p => (UTF8String.fromString(p.id), p))
+      .sortBy(_._1)(Ordering.fromLessThan(_.compareTo(_) < 0))
+      .map(_._2).toArray
 
+  /** Route `origins` × `dests`. Both sets are driver-side: the caller
+    * collects them, so the operator reads its inputs when it is called;
+    * the returned matrix is routed each time it is evaluated.
+    */
   def run(
       spark: SparkSession,
-      origins: Dataset[RoutePoint],
-      dests: Dataset[RoutePoint],
+      origins: collection.Seq[RoutePoint],
+      dests: collection.Seq[RoutePoint],
       router: Router,
       oSplit: Int = 5000,
       dSplit: Int = 5000,
       maxDepth: Int = 5): Dataset[TimeRecord] = {
     import spark.implicits._
-    implicit val s: SparkSession = spark
-
-    val oChunks = chunk(origins, oSplit).select($"pts".as("opts"))
-    val dChunks = chunk(dests, dSplit).select($"pts".as("dpts"))
-
-    val parallelism = spark.sparkContext.defaultParallelism
-    val blocks = oChunks
-      .crossJoin(dChunks) // J8 chunk-grid product (utils/utils.py:96-101)
-      .select($"opts".as("_1"), $"dpts".as("_2"))
-      .as[(Seq[RoutePoint], Seq[RoutePoint])]
-      .repartition(parallelism)
+    val sc = spark.sparkContext
+    val os = sc.broadcast(byId(origins))
+    val ds = sc.broadcast(byId(dests))
+    val nOc = (origins.length + oSplit - 1) / oSplit
+    val nDc = (dests.length + dSplit - 1) / dSplit
 
     // Emit InternalRows directly instead of going through the product
     // encoder: at matrix volume (15M rows at sf0.1, ~140B at reference
     // scale) the per-row String→UTF8String conversions of the encoder
     // dominate the whole operator. Ids are converted ONCE per block and
     // reused across the block's cross product.
-    val rowRdd = blocks.rdd.mapPartitions { iter =>
+    val rowRdd = sc.parallelize(0 until nOc * nDc, sc.defaultParallelism).mapPartitions { blocks =>
       // ONE mutable output row per task, updated in place: the scan's
       // UnsafeProjection copies every field before the next row is
       // requested (standard operator-iterator contract), and at matrix
@@ -99,16 +84,20 @@ object TravelTimeMatrix {
       // pure GC pressure (~15M allocations at sf0.1, ~140B at
       // reference scale).
       val out = new GenericInternalRow(3)
-      iter.flatMap { case (osSeq, dsSeq) =>
-        val os = osSeq.toIndexedSeq
-        val ds = dsSeq.toIndexedSeq
-        val oIds = Array.tabulate(os.length)(i => UTF8String.fromString(os(i).id))
-        val dIds = Array.tabulate(ds.length)(j => UTF8String.fromString(ds(j).id))
-        routeRows(router, os, ds, 0, os.length, 0, ds.length, 0, maxDepth, oIds, dIds, out)
+      blocks.flatMap { b =>
+        val oc = slice(os.value, b / nDc, oSplit)
+        val dc = slice(ds.value, b % nDc, dSplit)
+        val oIds = Array.tabulate(oc.length)(i => UTF8String.fromString(oc(i).id))
+        val dIds = Array.tabulate(dc.length)(j => UTF8String.fromString(dc(j).id))
+        routeRows(router, oc, dc, 0, oc.length, 0, dc.length, 0, maxDepth, oIds, dIds, out)
       }
     }
     SqlBridge.internalCreateDataFrame(spark, rowRdd, TimeRecordSchema).as[TimeRecord]
   }
+
+  /** Chunk `c` of `pts`: the `c`-th contiguous slice of at most `size`. */
+  private def slice(pts: Array[RoutePoint], c: Int, size: Int): IndexedSeq[RoutePoint] =
+    ArraySeq.unsafeWrapArray(pts.slice(c * size, (c + 1) * size))
 
   val TimeRecordSchema: StructType = StructType(Seq(
     StructField("origin_id", StringType, nullable = true),

@@ -86,8 +86,8 @@ class JobSpec extends AnyFunSuite {
 
     // reference pass: the same matrix through the operator alone, one scan
     val snapper = new GridSnapper(noSnapAboveLat = 44.0)
-    val ro = Snap(s, origins.toDS(), snapper).map(p => RoutePoint(p.id, p.lon_snapped, p.lat_snapped))
-    val rd = Snap(s, dests.toDS(), snapper).map(p => RoutePoint(p.id, p.lon_snapped, p.lat_snapped))
+    val ro = Snap(s, origins.toDS(), snapper).map(p => RoutePoint(p.id, p.lon_snapped, p.lat_snapped)).collect()
+    val rd = Snap(s, dests.toDS(), snapper).map(p => RoutePoint(p.id, p.lon_snapped, p.lat_snapped)).collect()
     RouterCallSink.calls.set(0)
     TravelTimeMatrix.run(s, ro, rd, counting, 16, 8, 10).toDF().count()
     val singlePass = RouterCallSink.calls.get()

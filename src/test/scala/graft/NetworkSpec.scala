@@ -328,8 +328,7 @@ class NetworkSpec extends AnyFunSuite {
     val pts = (for (r <- 0 until H; c <- 0 until W)
       yield RoutePoint(f"P${r * W + c + 1}%03d", -100.0 + c * 0.125, 30.0 + r * 0.125)).toSeq
     val far = RoutePoint("X999", 50.0, 80.0) // unsnappable
-    val got = TravelTimeMatrix.run(spark,
-        spark.createDataset(pts :+ far), spark.createDataset(pts :+ far), rt,
+    val got = TravelTimeMatrix.run(spark, pts :+ far, pts :+ far, rt,
         oSplit = 7, dSplit = 7, maxDepth = 3)
       .collect().map(t => (t.origin_id, t.destination_id) -> t.duration_sec).toMap
     val step = 0.125 * 111320.0 / 8.0

@@ -55,10 +55,9 @@ class OsrmSpec extends AnyFunSuite {
   test("OsrmRouter against a mock /table server matches the synthetic router; nulls become missing") {
     withMockOsrm { base =>
       val s = spark
-      import s.implicits._
       val os = (0 until 30).map(i => RoutePoint(f"o$i%03d", 120.0 + (i % 7) * 0.25, 28.0 + (i % 5) * 0.25))
       val ds = (0 until 10).map(i => RoutePoint(f"d$i%03d", 121.0 + (i % 3) * 0.25, 28.25 + (i % 4) * 0.25))
-      val got = TravelTimeMatrix.run(s, os.toDS(), ds.toDS(), new OsrmRouter(base),
+      val got = TravelTimeMatrix.run(s, os, ds, new OsrmRouter(base),
           oSplit = 16, dSplit = 4, maxDepth = 8)
         .collect().map(r => (r.origin_id, r.destination_id) -> r.duration_sec).toMap
       assert(got.size == 300)

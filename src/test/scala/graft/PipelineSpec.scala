@@ -1,6 +1,7 @@
 package graft
 
 import graft.jobs.Pipeline
+import graft.schemas.Schemas
 import graft.sources.TableIO
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -69,7 +70,7 @@ class PipelineSpec extends AnyFunSuite {
   test("pair conservation and state-partitioned publish hold end-to-end") {
     firstRun
     val times = TableIO.readPartitioned(spark, s"$root/output/times")
-    val nMissing = Pipeline.countPartitioned(spark, s"$root/output/missing_pairs")
+    val nMissing = Pipeline.countPartitioned(spark, s"$root/output/missing_pairs", Schemas.missingPairs)
     val meta = spark.read.parquet(s"$root/output/metadata").head
     val n = times.count() + nMissing
     assert(n == meta.getAs[Long]("calc_n_pairs"))

@@ -2,7 +2,8 @@ package graft
 
 import graft.jobs.{CalculateTimes, Pipeline, Reconcile}
 import graft.routing._
-import graft.sources.TableIO
+import graft.schemas.Schemas
+import graft.sources.{TableIO, TreeTxn}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -26,12 +27,18 @@ class ReconcileSpec extends AnyFunSuite {
       .select("origin_id", "destination_id", "duration_sec")
       .collect().map(r => (r.getString(0), r.getString(1), r.getDouble(2))).toSet
 
+  private def missingCount(out: String): Long =
+    Pipeline.countPartitioned(spark, s"$out/missing_pairs", Schemas.missingPairs)
+
+  private def fresh(out: String): Unit =
+    org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
+      .delete(new org.apache.hadoop.fs.Path(out), true)
+
   test("flaky run + reconcile converges to the full-route result; conservation holds") {
     val s = spark
     import s.implicits._
     val out = "/tmp/graft_reconcile_spec"
-    org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-      .delete(new org.apache.hadoop.fs.Path(out), true)
+    fresh(out)
     // run 1: transient failures — every origin with prefix 000001 fails
     val flaky = new SyntheticRouter(30.0,
       originIsland = p => p.id.startsWith("000001"), destIsland = _ => false)
@@ -39,7 +46,7 @@ class ReconcileSpec extends AnyFunSuite {
       cfg0.copy(outDir = out))
     val total = 60L * 15L
     val t1 = timesSet(s"$out/times").size
-    val m1 = Pipeline.countPartitioned(s, s"$out/missing_pairs")
+    val m1 = missingCount(out)
     assert(m1 > 0, "fixture must produce missing pairs")
     assert(t1 + m1 == total)
 
@@ -50,12 +57,11 @@ class ReconcileSpec extends AnyFunSuite {
     assert(r.nMissingBefore == m1)
     assert(r.nReconciled == m1)
     assert(r.nStillMissing == 0)
-    assert(Pipeline.countPartitioned(s, s"$out/missing_pairs") == 0)
+    assert(missingCount(out) == 0)
 
     // the merged tree equals a clean full-route run, value for value
     val ref = "/tmp/graft_reconcile_ref"
-    org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-      .delete(new org.apache.hadoop.fs.Path(ref), true)
+    fresh(ref)
     CalculateTimes.run(s, origins.toDS(), dests.toDS(), snapper, healthy,
       cfg0.copy(outDir = ref))
     assert(timesSet(s"$out/times") == timesSet(s"$ref/times"))
@@ -70,8 +76,7 @@ class ReconcileSpec extends AnyFunSuite {
     val s = spark
     import s.implicits._
     val out = "/tmp/graft_reconcile_partial"
-    org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-      .delete(new org.apache.hadoop.fs.Path(out), true)
+    fresh(out)
     // run 1: two failure classes — transient (origin 000001*) and
     // persistent (destination 050000[0-3]*)
     val flaky = new SyntheticRouter(30.0,
@@ -80,7 +85,7 @@ class ReconcileSpec extends AnyFunSuite {
     CalculateTimes.run(s, origins.toDS(), dests.toDS(), snapper, flaky,
       cfg0.copy(outDir = out))
     val total = 60L * 15L
-    val m1 = Pipeline.countPartitioned(s, s"$out/missing_pairs")
+    val m1 = missingCount(out)
     assert(timesSet(s"$out/times").size + m1 == total)
 
     // reconcile fixes the transient class only
@@ -99,5 +104,44 @@ class ReconcileSpec extends AnyFunSuite {
       oSplit = 16, dSplit = 8, maxDepth = 10)
     assert(r2.nStillMissing == 0)
     assert(timesSet(s"$out/times").size == total)
+  }
+
+  test("a crash inside the missing_pairs publish is recovered: the tree stays, conservation holds") {
+    val s = spark
+    import s.implicits._
+    val out = "/tmp/graft_reconcile_crash"
+    fresh(out)
+    val flaky = new SyntheticRouter(30.0,
+      originIsland = p => p.id.startsWith("000001"), destIsland = _ => false)
+    CalculateTimes.run(s, origins.toDS(), dests.toDS(), snapper, flaky,
+      cfg0.copy(outDir = out))
+    val total = 60L * 15L
+    val m1 = missingCount(out)
+    assert(m1 > 0)
+    val e = intercept[RuntimeException](Reconcile.missingPairs(s, out,
+      new SyntheticRouter(30.0), cfg0, oSplit = 16, dSplit = 8, maxDepth = 10,
+      failpoint = {
+        case "claimed" => throw new RuntimeException("injected-crash")
+        case _ => ()
+      }))
+    assert(e.getMessage == "injected-crash")
+    // the rewrite is claimed but unpublished: the old tree is still live
+    assert(missingCount(out) == m1)
+    assert(TreeTxn.recover(s, s"$out/_txn").rolledForward.size == 1)
+    assert(missingCount(out) == 0)
+    assert(timesSet(s"$out/times").size == total)
+    // a second reconcile finds nothing left to do
+    assert(Reconcile.missingPairs(s, out, new SyntheticRouter(30.0), cfg0) ==
+      Reconcile.Result(0, 0, 0))
+  }
+
+  test("countPartitioned counts an empty tree as 0 and fails on an absent one") {
+    val dir = "/tmp/graft_count_partitioned"
+    fresh(dir)
+    intercept[org.apache.spark.sql.AnalysisException](missingCount(dir))
+    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        Schemas.missingPairs)
+      .write.parquet(s"$dir/missing_pairs")
+    assert(missingCount(dir) == 0)
   }
 }

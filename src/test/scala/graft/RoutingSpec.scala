@@ -43,16 +43,36 @@ class RoutingSpec extends AnyFunSuite {
 
   test("distributed run matches task-local routeBlock on the same inputs") {
     val s = spark
-    import s.implicits._
     val os = (0 until 50).map(i => RoutePoint(f"o$i%03d", 120.0 + (i % 7) * 0.25, 30.0 + (i % 5) * 0.25))
     val ds = (0 until 20).map(i => RoutePoint(f"d$i%03d", 121.0 + (i % 3) * 0.25, 31.0 + (i % 11) * 0.25))
     val router = new SyntheticRouter(30.0, p => p.id == "o013", p => p.id == "d007")
-    val got = TravelTimeMatrix.run(s, os.toDS(), ds.toDS(), router, oSplit = 16, dSplit = 8, maxDepth = 10)
+    val got = TravelTimeMatrix.run(s, os, ds, router, oSplit = 16, dSplit = 8, maxDepth = 10)
       .collect().map(r => (r.origin_id, r.destination_id) -> r.duration_sec).toMap
     val want = TravelTimeMatrix.routeBlock(router, os.toIndexedSeq, ds.toIndexedSeq, 0, 10)
       .map(r => (r.origin_id, r.destination_id) -> r.duration_sec).toMap
     assert(got == want)
     assert(got.size == 1000)
+  }
+
+  test("depth-capped NULL pairs follow contiguous chunks of Spark's id order") {
+    val s = spark
+    import s.implicits._
+    // UTF-16 order puts "😀" (a surrogate pair) before "｡" (U+FF61); UTF-8
+    // byte order, which orderBy("id") uses, puts it after
+    val ids = Seq("b", "｡1", "｡2", "😀1", "😀2", "a", "😀0", "｡0")
+    val dests = Seq("d0", "d1", "d2").map(RoutePoint(_, 121.0, 30.0))
+    val planted = Set("｡2", "😀0")
+    val oSplit = 3
+    val chunks = ids.toDF("id").orderBy("id").as[String].collect().toSeq.grouped(oSplit).toSeq
+    assert(chunks != ids.sorted.grouped(oSplit).toSeq, "fixture must separate the two orders")
+    val want = (for (c <- chunks if planted.subsetOf(c.toSet); o <- c; d <- dests)
+      yield (o, d.id)).toSet
+    assert(want.nonEmpty, "both planted ids must share a chunk in Spark's order")
+    val got = TravelTimeMatrix.run(s, ids.reverse.map(RoutePoint(_, 120.0, 30.0)), dests,
+        new PairFailRouter(planted), oSplit = oSplit, dSplit = 2, maxDepth = 0)
+      .collect()
+    assert(got.length == ids.size * dests.size)
+    assert(got.filter(_.duration_sec.isEmpty).map(r => (r.origin_id, r.destination_id)).toSet == want)
   }
 
   test("snap: grid snap + no-snap fallback + is_snapped") {
@@ -90,6 +110,13 @@ class RoutingSpec extends AnyFunSuite {
       assert(byId(p.id) == s0.get)
     }
   }
+}
+
+/** Fails every block whose origins hold all of `planted`. */
+final class PairFailRouter(planted: Set[String]) extends Router {
+  override def table(os: IndexedSeq[RoutePoint], ds: IndexedSeq[RoutePoint]): Array[Array[Double]] =
+    if (planted.subsetOf(os.map(_.id).toSet)) throw new RoutingFailure("planted pair")
+    else Array.fill(os.length, ds.length)(1.0)
 }
 
 /** JVM-local sink recording batch sizes (tests run local[*], one JVM). */

@@ -34,8 +34,10 @@ object PublishProfile {
       originIsland = p => p.id.toLong % 37 == 0,
       destIsland = p => (p.id.toLong - 500000) % 41 == 0)
 
+    val os = origins.as[RoutePoint].collect()
+    val ds = dests.as[RoutePoint].collect()
     def routed = TravelTimeMatrix.run(
-      s, origins.as[RoutePoint], dests.as[RoutePoint], router,
+      s, os, ds, router,
       oSplit = 512, dSplit = 64, maxDepth = 12)
 
     timed("route only (noop write)") {
