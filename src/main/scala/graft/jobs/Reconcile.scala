@@ -11,8 +11,9 @@ import org.apache.spark.sql.functions._
   * re-run them, merge) as one in-engine job. At national scale transient
   * routing failures are routine; the recovery contract is:
   *
-  *  1. re-route ONLY the published missing (origin, destination) pairs —
-  *     never the full matrix;
+  *  1. re-route ONLY the published missing (origin, destination) pairs
+  *     that `times` does not already hold — never the full matrix, and
+  *     never a pair a crashed run appended before its publish;
   *  2. append newly-routable rows to the `times` tree through the same
   *     ordered-publish sink (per-file row-group order survives; the tree
   *     accretes files, which [[graft.sources.TableIO.compact]] folds);
@@ -64,38 +65,43 @@ object Reconcile {
 
     val missing = TableIO.readPartitioned(spark, missingDir, Some(Schemas.missingPairs))
       .select("origin_id", "destination_id")
+    // what the WRITTEN `times` tree covers (2-column pruned scan); each
+    // call lists the tree's files afresh
+    def covered = TableIO.readPartitioned(spark, timesDir, Some(Schemas.missingPairs))
+      .select("origin_id", "destination_id")
+    // a run that crashed before its missing_pairs publish already appended
+    // its rerouted pairs: those are in both trees, and only the rest is
+    // rerouted, so a re-run republishes without appending them twice
+    val pending = missing.join(covered, Seq("origin_id", "destination_id"), "left_anti")
     // bounded state: the distinct ids of the failed pairs (id strings
     // only; at the reference's scale missing pairs are a thin slice, and
     // the routed payload never rides this frame)
     val points = TableIO.readPartitioned(spark, pointsDir)
     def side(pointType: String, idCol: String) = points
       .filter(col("point_type") === pointType)
-      .join(missing.select(col(idCol).as("id")).distinct(), Seq("id"), "left_semi")
+      .join(pending.select(col(idCol).as("id")).distinct(), Seq("id"), "left_semi")
       .select(col("id"), col("lon_snapped").as("lon"), col("lat_snapped").as("lat"))
       .as[RoutePoint]
       .collect()
-
-    val rerouted = TravelTimeMatrix.run(
-      spark, side("origin", "origin_id"), side("destination", "destination_id"),
-      router, oSplit, dSplit, maxDepth).toDF()
+    val (os, ds) = (side("origin", "origin_id"), side("destination", "destination_id"))
 
     val partCols: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
       CalculateTimes.withPartitionCols(_, cfg, Some(CalculateTimes.stateOf(col("origin_id"))))
 
-    // only pairs that were actually missing AND now routed are merged —
-    // the rest of the sub-product is already in the tree
-    val fixed = rerouted
-      .filter(col("duration_sec").isNotNull)
-      .join(missing, Seq("origin_id", "destination_id"), "left_semi")
-    TableIO.writePartitioned(
-      partCols(fixed), timesDir, Seq("origin_id", "destination_id"),
-      bloomCols = Seq("destination_id" -> 100000L),
-      mode = "append")
+    if (os.nonEmpty && ds.nonEmpty) {
+      val rerouted = TravelTimeMatrix.run(spark, os, ds, router, oSplit, dSplit, maxDepth).toDF()
+      // only pairs that were actually pending AND now routed are merged —
+      // the rest of the sub-product is already in the tree
+      val fixed = rerouted
+        .filter(col("duration_sec").isNotNull)
+        .join(pending, Seq("origin_id", "destination_id"), "left_semi")
+      TableIO.writePartitioned(
+        partCols(fixed), timesDir, Seq("origin_id", "destination_id"),
+        bloomCols = Seq("destination_id" -> 100000L),
+        mode = "append")
+    }
 
-    // still-missing = published missing minus what the WRITTEN tree now
-    // covers (2-column pruned scan of the appended tree)
-    val covered = TableIO.readPartitioned(spark, timesDir, Some(Schemas.missingPairs))
-      .select("origin_id", "destination_id")
+    // still-missing = published missing minus what the tree now covers
     val still = missing.join(covered, Seq("origin_id", "destination_id"), "left_anti")
 
     // stage the remainder beside the live tree (which `missing` is still

@@ -1,11 +1,9 @@
 package graft.operators
 
+import graft.plans.DedupFunctions.{minHashBands, wordNGrams}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.XxHash64Function
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, StringType}
-import org.apache.spark.unsafe.types.UTF8String
 
 /** Deduplication operator family for document corpora, designed
   * shuffle-light for 100 TB:
@@ -18,7 +16,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - [[minhashPairs]]: MinHash + banded LSH candidates, then exact
   *    Jaccard verification of candidates only — the scale path. One row
   *    per document end to end: gram sets, minima and band buckets are
-  *    computed map-side, so what shuffles is the (doc, band, bucket)
+  *    computed map-side by two codegen'd expressions
+  *    ([[graft.plans.WordNGrams]], [[graft.plans.MinHashBands]]) with no
+  *    UDF and no per-gram lambda, so what shuffles is the (doc, band, bucket)
   *    rows of the candidate self-join, the distinct candidate pairs, and
   *    the per-document gram arrays the candidates join to for
   *    verification; no per-gram row and no full text ever shuffles.
@@ -126,19 +126,18 @@ object Dedup {
           .as("dup_coverage"))
   }
 
-  /** (doc_id, grams): each document's word n-grams in text order (docs
-    * shorter than n words have none — Spark's sequence() would go
-    * descending on a negative span, hence the pre-filter).
+  /** (doc_id, gram) rows: each document row's distinct word n-grams
+    * ([[graft.plans.WordNGrams]]), none for docs shorter than n words.
+    * The kernel is exploded directly: exploding a `grams` column instead
+    * makes the optimizer infer a `size(grams) > 0` filter and push it
+    * below the projection, evaluating the kernel twice per document.
+    * Also [[TrainingPrep]]'s contamination gram rows.
     */
-  private def ngrams(docs: DataFrame, n: Int): DataFrame =
-    docs.select(col("doc_id"), split(col("text"), " ").as("w"))
-      .filter(size(col("w")) >= n)
-      .select(col("doc_id"), expr(
-        s"transform(sequence(0, size(w) - $n), i -> concat_ws(' ', slice(w, i + 1, $n)))").as("grams"))
+  private[operators] def ngrams(docs: DataFrame, n: Int): DataFrame =
+    docs.select(col("doc_id"), explode(wordNGrams(col("text"), n)).as("gram"))
 
   /** Distinct (doc_id, gram) shingle rows. */
-  private def shingles(docs: DataFrame, n: Int): DataFrame =
-    ngrams(docs, n).select(col("doc_id"), explode(col("grams")).as("gram")).distinct()
+  private def shingles(docs: DataFrame, n: Int): DataFrame = ngrams(docs, n).distinct()
 
   /** Document-frequency cap: drops shingles appearing in more than
     * `maxDf` documents BEFORE any self-join. A shingle shared by k docs
@@ -361,56 +360,35 @@ object Dedup {
   }
 
   /** One row per document: (doc_id, grams), the document's distinct word
-    * n-grams as an array — no explode, no shuffle without `maxDf`; with
-    * it, the [[dfCapped]] survivors are regrouped per document. Documents
-    * shorter than n words, and under `maxDf` documents whose every gram
-    * is capped, have no row. Precondition: doc ids are unique — rows
-    * sharing an id are signed and verified as separate documents here.
+    * n-grams as one array ([[graft.plans.WordNGrams]]) — no explode, no
+    * shuffle without `maxDf`; with it, the [[dfCapped]] survivors are
+    * regrouped per document. Documents shorter than n words have a null
+    * gram set, and under `maxDf` documents whose every gram is capped
+    * have no row; neither signs a band row, so neither meets a candidate.
+    * (A filter on the null would be pushed below the projection and run
+    * the kernel twice per document.) Precondition: doc ids are unique —
+    * rows sharing an id are signed and verified as separate documents
+    * here.
     */
-  private def gramSets(docs: DataFrame, n: Int, maxDf: Option[Int]): DataFrame = {
-    val g = ngrams(docs, n).select(col("doc_id"), array_distinct(col("grams")).as("grams"))
+  private def gramSets(docs: DataFrame, n: Int, maxDf: Option[Int]): DataFrame =
     maxDf match {
-      case None => g
+      case None => docs.select(col("doc_id"), wordNGrams(col("text"), n).as("grams"))
       case Some(_) =>
-        dfCapped(g.select(col("doc_id"), explode(col("grams")).as("gram")), maxDf)
+        dfCapped(ngrams(docs, n), maxDf)
           .groupBy(col("doc_id")).agg(collect_set(col("gram")).as("grams"))
     }
-  }
 
-  /** (doc_id, band, bucket) LSH rows in one map-side pass per document.
-    * Each gram is lifted to its non-negative 32-bit murmur hash (Spark's
-    * `hash`, seed 42); the nHashes minima come from a deterministic
-    * affine family over a >2^32 prime; each band's bucket is
-    * xxhash64(band, "m1,m2,...") chained from seed 42 the way Spark's
-    * `xxhash64` chains its arguments. The rows are bit-identical to the
-    * former groupBy-over-shingles formulation (DedupSpec keeps it as the
+  /** (doc_id, band, bucket) LSH rows in one map-side pass per document:
+    * [[graft.plans.MinHashBands]] signs each gram set (Spark's murmur
+    * `hash` of each gram, 64 minima of an affine family over a >2^32
+    * prime, xxhash64 band buckets chained from seed 42) and the buckets
+    * are posexploded. The rows are bit-identical to the former
+    * groupBy-over-shingles formulation (DedupSpec keeps it as the
     * oracle), so persisted signature stores stay valid.
     */
-  private def bandRows(g: DataFrame, nHashes: Int, nBands: Int): DataFrame = {
-    val rowsPerBand = nHashes / nBands
-    val prime = 4294967311L
-    val as = Array.tabulate(nHashes)(i => ((i * 2654435761L) % 1048573L) | 1L)
-    val bs = Array.tabulate(nHashes)(i => (i * 97531L + 12345L) % 1048573L)
-    val buckets = udf { hs: Seq[Int] =>
-      val mins = Array.fill(nHashes)(Long.MaxValue)
-      hs.foreach { h =>
-        val gh = h + 2147483648L
-        var i = 0
-        while (i < nHashes) {
-          val v = (gh * as(i) + bs(i)) % prime
-          if (v < mins(i)) mins(i) = v
-          i += 1
-        }
-      }
-      Array.tabulate(nBands) { bnd =>
-        val sig = mins.slice(bnd * rowsPerBand, (bnd + 1) * rowsPerBand).mkString(",")
-        XxHash64Function.hash(UTF8String.fromString(sig), StringType,
-          XxHash64Function.hash(bnd, IntegerType, 42L))
-      }
-    }
+  private def bandRows(g: DataFrame, nHashes: Int, nBands: Int): DataFrame =
     g.select(col("doc_id"),
-      posexplode(buckets(transform(col("grams"), x => hash(x)))).as(Seq("band", "bucket")))
-  }
+      posexplode(minHashBands(col("grams"), nHashes, nBands)).as(Seq("band", "bucket")))
 
   /** Exact Jaccard of the candidate pairs (id_a, id_b) at or above
     * `threshold`: each pair meets the two per-document gram arrays and

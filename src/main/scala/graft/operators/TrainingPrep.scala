@@ -22,25 +22,14 @@ import org.apache.spark.sql.functions._
   */
 object TrainingPrep {
 
-  /** Distinct word n-grams per doc-row — same expansion as
-    * [[Dedup.duplicatedSpans]]'s windows but set-valued per document.
-    */
-  private def grams(docs: DataFrame, n: Int): DataFrame =
-    docs.select(col("doc_id"), split(col("text"), " ").as("w"))
-      .filter(size(col("w")) >= n)
-      .select(col("doc_id"),
-        explode(expr(
-          s"transform(sequence(0, size(w) - $n), i -> concat_ws(' ', slice(w, i + 1, $n)))"))
-          .as("gram"))
-
   /** Per-document benchmark contamination: how many DISTINCT n-grams of
     * the (small) `benchmark` frame appear in each document — the GPT-3
     * appendix-C eval-overlap test as an operator. Returns every corpus
     * doc_id with its hit count (0 when clean).
     */
   def contamination(docs: DataFrame, benchmark: DataFrame, n: Int): DataFrame = {
-    val bench = grams(benchmark, n).select(col("gram")).distinct()
-    val hits = grams(docs, n)
+    val bench = Dedup.ngrams(benchmark, n).select(col("gram")).distinct()
+    val hits = Dedup.ngrams(docs, n)
       .join(broadcast(bench), Seq("gram"))
       .groupBy(col("doc_id"))
       .agg(count_distinct(col("gram")).as("bench_hits"))
@@ -55,8 +44,8 @@ object TrainingPrep {
     */
   def decontaminate(docs: DataFrame, benchmark: DataFrame, n: Int,
       minHits: Long = 1L): DataFrame = {
-    val bench = grams(benchmark, n).select(col("gram")).distinct()
-    val flagged = grams(docs, n)
+    val bench = Dedup.ngrams(benchmark, n).select(col("gram")).distinct()
+    val flagged = Dedup.ngrams(docs, n)
       .join(broadcast(bench), Seq("gram"))
       .groupBy(col("doc_id"))
       .agg(count_distinct(col("gram")).as("bench_hits"))

@@ -159,7 +159,7 @@ object PipelineQueries extends QueryPack {
     }.mkString("(", " + ", ")")
 
   /** 8-token gram expansion over `src` — the SQL twin of
-    * `TrainingPrep.grams(_, 8)`.
+    * `Dedup.ngrams(_, 8)` (which keeps each gram once per document).
     */
   private def gram8Sql(src: String): String =
     s"""SELECT doc_id, unnest(list_transform(generate_series(1, len(w) - 7),

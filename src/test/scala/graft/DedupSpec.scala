@@ -135,6 +135,43 @@ class DedupSpec extends AnyFunSuite {
     assert(!rows(Dedup.minhashSignatures(edges, maxDf = Some(2))).exists(_._1 == 6L))
   }
 
+  test("WordNGrams equals array_distinct of the split/transform n-gram expression, interpreted and codegen'd") {
+    import spark.implicits._
+    val texts = Seq[(Long, String)](
+      (1L, ""), (2L, null),
+      (3L, "one two"),                                 // fewer than n = 3 words
+      (4L, "one two three"),                           // exactly n = 3 words
+      (5L, " leading space here"), (6L, "trailing space here "),
+      (7L, "a  b   c  d"), (8L, "   "),
+      (9L, "tab\tand newline\nare not word breaks at all"),
+      (10L, "naïve café über naïve café über 東京 タワー"),
+      (11L, "x y x y x y x y"))
+      .toDF("doc_id", "text")
+    val dir = java.nio.file.Files.createTempDirectory("graft_word_ngrams").toString
+    texts.write.mode("overwrite").parquet(dir)
+    def grams(df: DataFrame, n: Int): Map[Long, Option[Seq[String]]] =
+      df.select(col("doc_id"), graft.plans.DedupFunctions.wordNGrams(col("text"), n))
+        .as[(Long, Option[Seq[String]])].collect().toMap
+    for (n <- Seq(1, 2, 3)) {
+      val oracle = texts.select(col("doc_id"), split(col("text"), " ").as("w"))
+        .filter(size(col("w")) >= n)
+        .select(col("doc_id"), array_distinct(expr(
+          s"transform(sequence(0, size(w) - $n), i -> concat_ws(' ', slice(w, i + 1, $n)))")))
+        .as[(Long, Seq[String])].collect().toMap
+      val want = (1L to 11L).map(id => id -> oracle.get(id)).toMap
+      val local = grams(texts, n)
+      val read = spark.read.parquet(dir)
+      assert(read.select(graft.plans.DedupFunctions.wordNGrams(col("text"), n))
+        .queryExecution.executedPlan.toString.contains("*("), "parquet path is not codegen'd")
+      assert(local == want, s"interpreted, n=$n")
+      assert(grams(read, n) == want, s"codegen'd, n=$n")
+    }
+    // the edge cases are live
+    assert(grams(texts, 3)(2L).isEmpty && grams(texts, 3)(3L).isEmpty)
+    assert(grams(texts, 1)(1L).contains(Seq("")))
+    assert(grams(texts, 2)(11L).contains(Seq("x y", "y x")))
+  }
+
   test("simhash: banding is complete for hamming ≤ 3 (pigeonhole) and recalls most planted pairs") {
     val sh = Dedup.simhashPairs(docs, maxHamming = 3).collect()
       .map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"))).toSet

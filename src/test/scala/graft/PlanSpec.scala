@@ -1,7 +1,9 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.{ArrayTransform, ScalaUDF}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.optimizer.BuildRight
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
 import org.scalatest.funsuite.AnyFunSuite
@@ -163,6 +165,27 @@ class PlanSpec extends AnyFunSuite {
       "gram-array joins must plan sort-merge:\n" + big.initialPlan)
     assert(broadcastGrams(big.executedPlan).isEmpty,
       "AQE must not broadcast a gram-array side:\n" + big.executedPlan)
+  }
+
+  test("minhash: gram sets and band buckets are codegen'd kernels (no UDF, lambda or eval fallback)") {
+    object Aqe extends AdaptiveSparkPlanHelper
+    val df = graft.operators.Dedup.minhashPairs(Tables.documents(spark, sf0001))
+    df.collect()
+    val nodes = Aqe.collect(df.queryExecution.executedPlan) { case p => p }
+    val exprs = nodes.flatMap(_.expressions.flatMap(_.collect { case e => e }))
+    assert(exprs.exists(_.isInstanceOf[graft.plans.MinHashBands]), nodes.mkString("\n"))
+    assert(exprs.exists(_.isInstanceOf[graft.plans.WordNGrams]))
+    val slow = exprs.filter(e => e.isInstanceOf[ScalaUDF] || e.isInstanceOf[ArrayTransform] ||
+      e.isInstanceOf[CodegenFallback])
+    assert(slow.isEmpty, slow.mkString("\n"))
+    // both kernels run inside whole-stage codegen
+    def inCodegen(kernel: Class[_]) = nodes.exists {
+      case w: WholeStageCodegenExec =>
+        w.child.exists(_.expressions.exists(_.exists(kernel.isInstance)))
+      case _ => false
+    }
+    assert(inCodegen(classOf[graft.plans.MinHashBands]) &&
+      inCodegen(classOf[graft.plans.WordNGrams]), nodes.mkString("\n"))
   }
 
   test("q109: duplicated spans plan is one gram exchange, no join, no cartesian") {

@@ -135,6 +135,45 @@ class ReconcileSpec extends AnyFunSuite {
       Reconcile.Result(0, 0, 0))
   }
 
+  test("a re-run after a crash before the missing_pairs claim appends no pair twice") {
+    val s = spark
+    import s.implicits._
+    val flaky = new SyntheticRouter(30.0,
+      originIsland = p => p.id.startsWith("000001"), destIsland = _ => false)
+    def flakyRun(out: String): Long = {
+      fresh(out)
+      CalculateTimes.run(s, origins.toDS(), dests.toDS(), snapper, flaky,
+        cfg0.copy(outDir = out))
+      missingCount(out)
+    }
+    def reconcile(out: String, failpoint: String => Unit = _ => ()) =
+      Reconcile.missingPairs(s, out, new SyntheticRouter(30.0), cfg0,
+        oSplit = 16, dSplit = 8, maxDepth = 10, failpoint = failpoint)
+    val total = 60L * 15L
+    val out = "/tmp/graft_reconcile_rerun"
+    val m1 = flakyRun(out)
+    assert(m1 > 0)
+    // the rerouted pairs are appended to `times`, then the decision is
+    // recorded but never claimed: the pairs sit in both trees
+    val e = intercept[RuntimeException](reconcile(out, {
+      case "recorded" => throw new RuntimeException("injected-crash")
+      case _ => ()
+    }))
+    assert(e.getMessage == "injected-crash")
+    assert(missingCount(out) == m1)
+    // the re-run (whose recovery leaves the fresh intent alone) only
+    // republishes the remainder
+    assert(reconcile(out) == Reconcile.Result(m1, m1, 0))
+    val times = TableIO.readPartitioned(s, s"$out/times")
+    assert(times.groupBy("origin_id", "destination_id").count()
+      .filter(col("count") > 1).isEmpty, "a pair was appended twice")
+    assert(times.count() + missingCount(out) == total)
+    val ref = "/tmp/graft_reconcile_rerun_ref"
+    assert(flakyRun(ref) == m1)
+    reconcile(ref)
+    assert(timesSet(s"$out/times") == timesSet(s"$ref/times"))
+  }
+
   test("countPartitioned counts an empty tree as 0 and fails on an absent one") {
     val dir = "/tmp/graft_count_partitioned"
     fresh(dir)
